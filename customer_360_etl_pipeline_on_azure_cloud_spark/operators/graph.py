@@ -238,6 +238,8 @@ def pagerank_fixed(
         # collect() would then find an unrecomputable (truncated-
         # lineage) frame; and r_0 is just the constant scale div N
         raise ValueError("pagerank_fixed: iterations must be >= 1")
+    if checkpoint_interval < 1:
+        raise ValueError("pagerank_fixed: checkpoint_interval must be >= 1")
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .distinct()
@@ -259,8 +261,6 @@ def pagerank_fixed(
         .agg(F.count(F.lit(1)).alias("outdeg"))
         .localCheckpoint(eager=True)
     )
-    if checkpoint_interval < 1:
-        raise ValueError("pagerank_fixed: checkpoint_interval must be >= 1")
     ranks = verts.select("id", F.lit(init).cast("long").alias("rank_fp"))
     prev_ckpt = None
     for i in range(iterations):
@@ -954,6 +954,8 @@ def pagerank_weighted(
 
     if iterations < 1:
         raise ValueError("pagerank_weighted: iterations must be >= 1")
+    if checkpoint_interval < 1:
+        raise ValueError("pagerank_weighted: checkpoint_interval must be >= 1")
     e = edges.select(
         F.col(src).alias("u"),
         F.col(dst).alias("v"),
@@ -988,8 +990,6 @@ def pagerank_weighted(
         .agg(F.sum("w").alias("wsum"))
         .localCheckpoint(eager=True)
     )
-    if checkpoint_interval < 1:
-        raise ValueError("pagerank_weighted: checkpoint_interval must be >= 1")
     ranks = verts.select("id", F.lit(init).cast("long").alias("rank_fp"))
     for i in range(iterations):
         carriers = ranks.join(wsum, ranks["id"] == wsum["u"]).select(

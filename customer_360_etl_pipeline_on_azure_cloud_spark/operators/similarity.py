@@ -1718,9 +1718,9 @@ def pq_codebooks_distributed(
     relative to the quantizer that produced them; ``ValueError``
     otherwise); the caller owns the frame's persistence and guarantees
     it matches ``coarse_cents`` — the residual dimensionality is
-    checked against it.  ``corpus`` and ``vec_col`` are ignored when
-    it is given.  The caller also guarantees the frame is non-empty
-    (the corpus-scan path probes emptiness itself).
+    checked against it, with or without ``init``, and an empty frame
+    is refused.  ``corpus`` and ``vec_col`` are ignored when it is
+    given.
     """
     import pandas as pd
     from pyspark.sql import types as T
@@ -1801,6 +1801,8 @@ def pq_codebooks_distributed(
                     "pq_codebooks_distributed: init shape "
                     f"{books.shape} != {(m, ksub, dsub)}"
                 )
+            # one stored residual is enough for the dim check below
+            rows = prepared.limit(1).collect() if resid_mode else []
         else:
             # hash-ordered init sample: 4*ksub rows gives each subspace
             # slack to pick ksub DISTINCT subvectors (duplicate init
@@ -1813,14 +1815,16 @@ def pq_codebooks_distributed(
                 .limit(4 * ksub)
                 .collect()
             )
+        if resid_mode:
+            if not rows:
+                raise ValueError("pq_codebooks_distributed: empty corpus")
+            if len(rows[0]["resid"]) != d:
+                raise ValueError(
+                    "pq_codebooks_distributed: prepared_resid dim "
+                    f"{len(rows[0]['resid'])} != coarse_cents dim {d}"
+                )
+        if init is None:
             if resid_mode:
-                if not rows:
-                    raise ValueError("pq_codebooks_distributed: empty corpus")
-                if len(rows[0]["resid"]) != d:
-                    raise ValueError(
-                        "pq_codebooks_distributed: prepared_resid dim "
-                        f"{len(rows[0]['resid'])} != coarse_cents dim {d}"
-                    )
                 S = np.rint(
                     np.array(
                         [np.asarray(r["resid"], dtype=np.float64) for r in rows]

@@ -19,7 +19,7 @@ from ..functions.scalar import (
     recode,
     row_sum,
 )
-from ..operators.aggregates import distinct_count, sum_pivot, two_pass_segment
+from ..operators.aggregates import two_pass_segment
 
 #: AppName -> viewing category (reference ETL_pipeline.py:64-72).
 APP_CATEGORY = {
@@ -71,64 +71,55 @@ def interaction_features(
     """Full §3.1 pipeline: devices + activeness + category pivot +
     MostWatch + CustomerTaste + CustomerType.
 
-    Plan shape at scale: three aggregations over the same ``Contract``
-    key (devices, activeness, pivot) — each one shuffle with map-side
-    partial agg — then two joins back on ``Contract``. AQE turns the
-    feature-table joins into broadcast joins when the aggregated sides
-    are small relative to the fact table (they are: one row per
-    customer).
+    Plan shape at scale: one scan of ``log_content`` and one hash
+    aggregate on ``Contract`` that yields all three features, with no
+    join. Its two exact distinct counts (Mac, Date) make Spark plan an
+    Expand, which emits each row once per distinct count and once for
+    the category sums, ahead of the aggregate's two shuffles. The
+    customer-grain result (one row per customer) is checkpointed once,
+    so the quantile pass and the caller's sink both read it instead of
+    the source.
+
+    The reference joins three per-Contract tables with inner joins
+    (ETL_pipeline.py:285-286); the two filters after the aggregate keep
+    exactly the customers those joins keep: some row with a viewing
+    category, and an Activeness bucket other than 'error'.
     """
-    devices = distinct_count(log_content, ["Contract"], "Mac", "TotalDevices")
-
-    active_days = distinct_count(log_content, ["Contract"], "Date", "Days_Active")
-    activeness = (
-        active_days.withColumn(
-            "Activeness", bucketize("Days_Active", ACTIVENESS_BUCKETS)
+    type_ = recode("AppName", APP_CATEGORY)
+    customers = (
+        log_content.filter(F.col("Contract") != "0")
+        .groupBy("Contract")
+        .agg(
+            F.countDistinct("Mac").alias("TotalDevices"),
+            F.countDistinct("Date").alias("Days_Active"),
+            *[
+                F.coalesce(
+                    F.sum(F.when(type_ == c, F.col("TotalDuration"))), F.lit(0)
+                ).alias(c)
+                for c in CATEGORIES
+            ],
+            F.max(type_ != "error").alias("categorized"),
         )
-        .filter(F.col("Activeness") != "error")
-        .select("Contract", "Activeness")
+        .withColumn("Activeness", bucketize("Days_Active", ACTIVENESS_BUCKETS))
+        .filter(F.col("categorized") & (F.col("Activeness") != "error"))
+        .select(
+            "Contract",
+            *[F.col(c).alias(f"Total_{c}") for c in CATEGORIES],
+            "TotalDevices",
+            argmax_label([(c, c) for c in CATEGORIES]).alias("MostWatch"),
+            conditional_concat("-", [(c, c) for c in CATEGORIES]).alias(
+                "CustomerTaste"
+            ),
+            "Activeness",
+            row_sum(*CATEGORIES).alias("TotalDuration"),
+        )
+        .localCheckpoint(eager=True)
     )
-
-    categorized = (
-        log_content.withColumn("Type", recode("AppName", APP_CATEGORY))
-        .filter(F.col("Contract") != "0")
-        .filter(F.col("Type") != "error")
-        .select("Contract", "Type", "TotalDuration")
-    )
-    wide = sum_pivot(
-        categorized,
-        keys=["Contract"],
-        pivot_col="Type",
-        pivot_values=list(CATEGORIES),
-        value_col="TotalDuration",
-        fill=0,
-    )
-
-    wide = wide.withColumn("MostWatch", argmax_label([(c, c) for c in CATEGORIES]))
-    wide = wide.withColumn(
-        "CustomerTaste", conditional_concat("-", [(c, c) for c in CATEGORIES])
-    )
-
-    feats = wide.join(activeness, on=["Contract"], how="inner").join(
-        devices, on=["Contract"], how="inner"
-    )
-
-    feats = feats.withColumn("TotalDuration", row_sum(*CATEGORIES))
-    feats = two_pass_segment(
-        feats,
+    return two_pass_segment(
+        customers,
         "TotalDuration",
         customer_type_case,
         exact=exact_quantiles,
         accuracy=quantile_accuracy,
         alias="CustomerType",
-    )
-
-    return feats.select(
-        "Contract",
-        *[F.col(c).alias(f"Total_{c}") for c in CATEGORIES],
-        "TotalDevices",
-        "MostWatch",
-        "CustomerTaste",
-        "Activeness",
-        "CustomerType",
-    )
+    ).drop("TotalDuration")

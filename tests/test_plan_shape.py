@@ -409,3 +409,67 @@ def test_gopher_flags_single_aggregation(spark):
     assert "Join" not in plan
     # one hash aggregate pair (partial + final) over the source key
     assert plan.count("HashAggregate") == 2
+
+
+def _sql_plans(spark, action) -> list[list[str]]:
+    """Run ``action`` and return, per SQL execution it started, the node
+    names of that execution's final physical plan. They are read from
+    the SQL status store, so the plans of eager jobs run inside a call
+    (quantile passes, checkpoints) are counted too."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def recent_ids() -> list[int]:
+        bus.waitUntilEmpty()
+        n = store.executionsCount()
+        seq = store.executionsList(max(0, n - 64), 64)
+        return [seq.apply(i).executionId() for i in range(seq.size())]
+
+    before = max(recent_ids(), default=-1)
+    action()
+    plans = []
+    for eid in recent_ids():
+        if eid > before:
+            nodes = store.planGraph(eid).allNodes()
+            plans.append([nodes.apply(i).name() for i in range(nodes.size())])
+    return plans
+
+
+def test_interaction_features_scans_its_source_once(spark, tmp_path):
+    # devices, activeness and the category pivot are one aggregate over
+    # log_content, and the customer-grain table is checkpointed before
+    # the quantile pass: the call reads the source file once, and a sink
+    # write of its output reads only the checkpoint
+    import json
+
+    from customer_360_etl_pipeline_on_azure_cloud_spark.plans.interaction import (
+        interaction_features,
+    )
+
+    src = tmp_path / "log_content.json"
+    apps = ("CHANNEL", "VOD", "SPORT", "RELAX", "CHILD", "MYTV")
+    src.write_text("".join(
+        json.dumps({
+            "Contract": f"CT{i % 23}", "Mac": f"m{i % 5}",
+            "AppName": apps[i % len(apps)], "TotalDuration": i,
+            "Date": f"2022-04-{1 + i % 28:02d}",
+        }) + "\n"
+        for i in range(400)
+    ))
+    lc = spark.read.schema(
+        "Contract string, Mac string, AppName string, "
+        "TotalDuration long, Date date"
+    ).json(str(src))
+
+    def json_scans(plans):
+        return sum(n.startswith("Scan json") for p in plans for n in p)
+
+    out = []
+    call = _sql_plans(spark, lambda: out.append(interaction_features(lc)))
+    assert json_scans(call) == 1
+    assert not any("Join" in n for p in call for n in p)
+
+    sink = str(tmp_path / "sink")
+    write = _sql_plans(spark, lambda: out[0].write.parquet(sink))
+    assert json_scans(call + write) == 1
+    assert spark.read.parquet(sink).count() == out[0].count() > 0

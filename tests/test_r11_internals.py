@@ -85,12 +85,23 @@ def test_pagerank_weighted_interval_invariant(spark, interval):
 
 
 def test_pagerank_interval_guard(spark):
+    # the argument is checked before any persist or eager checkpoint:
+    # a bad interval runs no job and leaves nothing persisted
+    sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs().keySet())
     e = spark.createDataFrame(EDGES, "src long, dst long")
-    with pytest.raises(ValueError, match="checkpoint_interval"):
-        pagerank_fixed(e, checkpoint_interval=0)
     we = spark.createDataFrame(WEDGES, "u long, v long, w long")
-    with pytest.raises(ValueError, match="checkpoint_interval"):
-        pagerank_weighted(we, checkpoint_interval=0)
+    sc.setJobGroup("pagerank_interval_guard", "bad checkpoint_interval")
+    try:
+        with pytest.raises(ValueError, match="checkpoint_interval"):
+            pagerank_fixed(e, checkpoint_interval=0)
+        with pytest.raises(ValueError, match="checkpoint_interval"):
+            pagerank_weighted(we, checkpoint_interval=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("pagerank_interval_guard")) == []
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
 
 
 # --- exact_cross_pairs cross-rank-only join ---------------------------------
@@ -225,4 +236,18 @@ def test_pq_prepared_resid_requires_coarse_cents(spark):
         pq_codebooks_distributed(
             emb, 4, 8, id_col="vec_id", vec_col="embedding",
             prepared_resid=fake, coarse_cents=None,
+        )
+
+
+def test_pq_prepared_resid_dim_checked_with_init(spark):
+    # residuals of dim 6 against a dim-4 coarse quantizer: refused even
+    # when explicit init codebooks skip the init sample
+    fake = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(6)]) for i in range(8)],
+        "id long, resid array<double>",
+    )
+    with pytest.raises(ValueError, match="prepared_resid dim 6"):
+        pq_codebooks_distributed(
+            None, 2, 2, prepared_resid=fake,
+            coarse_cents=np.zeros((2, 4)), init=np.zeros((2, 2, 2)),
         )

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from customer_360_etl_pipeline_on_azure_cloud_spark.plans.interaction import (
+    CATEGORIES,
     interaction_features,
 )
 from customer_360_etl_pipeline_on_azure_cloud_spark.plans.merge import (
@@ -117,6 +118,68 @@ def test_activeness_over_31_days_is_error_and_dropped(spark):
     )
     out = interaction_features(df).collect()
     assert out == []  # activeness 'error' row filtered -> inner join drops CX
+
+
+@pytest.fixture(scope="module")
+def edge_features(spark):
+    # The traps of computing devices, activeness and the category pivot
+    # in one aggregate instead of three joined ones:
+    # E1: one categorized row plus UNKNOWN_APP rows on 8 more days and
+    #   on a second Mac -> those rows still count toward TotalDevices
+    #   and Activeness, not toward any category total.
+    # E2: its only categorized row has a NULL TotalDuration -> kept,
+    #   with 0 in every total.
+    # NULL Contract: dropped, like the '0' sentinel.
+    # E3: every Mac is NULL -> TotalDevices 0 (COUNT DISTINCT skips NULL).
+    rows = [
+        ("E1", "m1", "CHANNEL", 20, d(1)),
+        *[("E1", "m2", "UNKNOWN_APP", 5, d(day)) for day in range(2, 10)],
+        ("E2", "m3", "VOD", None, d(1)),
+        (None, "m4", "SPORT", 60, d(1)),
+        ("E3", None, "SPORT", 30, d(1)),
+        ("E3", None, "RELAX", 10, d(2)),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "Contract string, Mac string, AppName string, TotalDuration long, Date date",
+    )
+    return interaction_features(df)
+
+
+@pytest.fixture(scope="module")
+def edge_rows(edge_features):
+    return {r["Contract"]: r.asDict() for r in edge_features.collect()}
+
+
+def test_unknown_app_rows_count_toward_devices_and_activeness(edge_rows):
+    e1 = edge_rows["E1"]
+    assert e1["TotalDevices"] == 2
+    assert e1["Activeness"] == "low"  # 9 distinct days
+    assert e1["Total_Truyen_hinh"] == 20  # UNKNOWN_APP durations excluded
+    assert e1["CustomerTaste"] == "Truyen_hinh"
+
+
+def test_null_duration_contract_kept_with_zero_totals(edge_rows):
+    e2 = edge_rows["E2"]
+    assert [e2[f"Total_{c}"] for c in CATEGORIES] == [0] * len(CATEGORIES)
+    assert e2["TotalDevices"] == 1
+    assert e2["Activeness"] == "very low"
+
+
+def test_null_contract_dropped(edge_rows):
+    assert set(edge_rows) == {"E1", "E2", "E3"}
+
+
+def test_all_null_macs_count_zero_devices(edge_rows):
+    e3 = edge_rows["E3"]
+    assert e3["TotalDevices"] == 0
+    assert (e3["Total_The_thao"], e3["Total_Giai_tri"]) == (30, 10)
+
+
+def test_category_totals_keep_long_type(edge_features):
+    types = dict(edge_features.dtypes)
+    assert {types[f"Total_{c}"] for c in CATEGORIES} == {"bigint"}
+    assert types["TotalDevices"] == "bigint"
 
 
 # --- search trends ---------------------------------------------------------
