@@ -20,12 +20,7 @@ from pyspark.sql import functions as F
 
 from .functions.scalar import money_cents
 from .session import tune
-from .sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark, shuffle_partitions=32)
-    return load_table(spark, sf_dir, name)
+from .sources.tables import _t
 
 
 def _cents_sql(col: str) -> str:

@@ -22,15 +22,9 @@ from .operators.dedup import word_shingles
 from .operators.sampling import split_assign, split_band_sql
 from .operators.text import PII_ORDER, PII_PATTERNS, pii_counts, redact_pii
 from .operators.util import finalize, spread
-from .session import tune
-from .sources.tables import load_table
+from .sources.tables import _t
 
 CURATION_QUERIES: dict = {}
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark, shuffle_partitions=32)
-    return load_table(spark, sf_dir, name)
 
 
 # --- deterministic train/val/test split -------------------------------------

@@ -28,6 +28,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .index import (
+    append_rows,
+    compact_tables,
+    open_table,
+    read_meta,
+    reset_tables,
+    write_rows,
+)
+from .skew import write_bucketed
+
 
 # --- exact ------------------------------------------------------------------
 
@@ -657,58 +667,62 @@ def write_minhash_index(
     * ``{name}_meta``  one row of construction parameters, so probes
       can't silently mix incompatible hash/band configurations.
 
-    The index costs one corpus scan to build and is append-able daily
-    (write each day's accepted batch with ``mode="append"`` — bucketed
-    tables append per-bucket files). Cites the scale contract promised
-    in minhash_index's docstring (VERDICT r4 item 1).
+    The index costs one corpus scan to build and is append-able daily:
+    ``mode="append"`` writes each day's accepted batch as per-bucket
+    files under the tables' stored bucket spec (``num_buckets`` is then
+    ignored) and adds no meta row.  It refuses a batch whose
+    ``(num_hashes, bands, shingle_n)`` differ from the stored ones
+    before writing anything.  Cites the scale contract promised in
+    minhash_index's docstring (VERDICT r4 item 1).
     """
-    from .skew import write_bucketed
-
     rows_per_band = num_hashes // bands
     assert rows_per_band * bands == num_hashes
     spark = df.sparkSession
-    if mode == "overwrite":
-        # The default (in-memory) catalog forgets tables across sessions
-        # but leaves their warehouse directories, and saveAsTable refuses
-        # to adopt an existing location [LOCATION_ALREADY_EXISTS] — drop
-        # any registered table AND any stale directory via the Hadoop FS
-        # API (works on local FS, HDFS, and object stores alike).
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        for t in (f"{name}_sig", f"{name}_bands", f"{name}_meta"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            path = spark._jvm.org.apache.hadoop.fs.Path(
-                f"{warehouse}/{t.lower()}"
+    sig_t, bands_t, meta_t = f"{name}_sig", f"{name}_bands", f"{name}_meta"
+    params = (num_hashes, bands, shingle_n)
+    if mode == "append":
+        stored = tuple(read_meta(spark, meta_t))
+        if stored != params:
+            raise ValueError(
+                "write_minhash_index: append params (num_hashes, bands, "
+                f"shingle_n)={params} differ from the index's {stored}"
             )
-            fs = path.getFileSystem(hconf)
-            if fs.exists(path):
-                fs.delete(path, True)
+    elif mode == "overwrite":
+        reset_tables(spark, sig_t, bands_t, meta_t)
+    else:
+        raise ValueError(f"write_minhash_index: unknown mode {mode!r}")
     sig = _signature_table(df, id_col, text_col, num_hashes, shingle_n)
     try:
-        write_bucketed(
-            sig.select("id", "sig"), f"{name}_sig",
-            bucket_by="id", num_buckets=num_buckets, sort_by="id", mode=mode,
-        )
+        sig_rows = sig.select("id", "sig")
         # Band rows derive from the persisted sig frame — no re-shingle.
-        write_bucketed(
-            _band_rows(sig, bands, rows_per_band), f"{name}_bands",
-            bucket_by=["band", "bhash"], num_buckets=num_buckets,
-            sort_by=["band", "bhash"], mode=mode,
-        )
-        spark.createDataFrame(
-            [(num_hashes, bands, shingle_n)],
-            "num_hashes int, bands int, shingle_n int",
-        ).write.mode(mode).saveAsTable(f"{name}_meta")
+        band_rows = _band_rows(sig, bands, rows_per_band)
+        if mode == "append":
+            append_rows(sig_rows, sig_t)
+            append_rows(band_rows, bands_t)
+        else:
+            write_bucketed(
+                sig_rows, sig_t,
+                bucket_by="id", num_buckets=num_buckets, sort_by="id",
+            )
+            write_bucketed(
+                band_rows, bands_t,
+                bucket_by=["band", "bhash"], num_buckets=num_buckets,
+                sort_by=["band", "bhash"],
+            )
+            write_rows(
+                spark, meta_t, [params],
+                "num_hashes int, bands int, shingle_n int",
+            )
     finally:
         sig.unpersist()
 
 
 def read_minhash_index(spark, name: str) -> MinhashIndex:
     """Open a persisted MinHash index written by :func:`write_minhash_index`."""
-    meta = spark.table(f"{name}_meta").collect()[0]
+    meta = read_meta(spark, f"{name}_meta")
     return MinhashIndex(
-        sig=spark.table(f"{name}_sig"),
-        bands=spark.table(f"{name}_bands"),
+        sig=open_table(spark, f"{name}_sig"),
+        bands=open_table(spark, f"{name}_bands"),
         num_hashes=meta.num_hashes,
         n_bands=meta.bands,
         shingle_n=meta.shingle_n,
@@ -723,76 +737,15 @@ def compact_minhash_index(spark, name: str) -> dict[str, int]:
     append job, so a year of daily ingests turns each bucket into ~365
     small files: scan tasks multiply, sort-within-bucket is lost, and
     object-store listing dominates probe startup.  Compaction rewrites
-    each table into the SAME bucket spec with exactly one file per
-    bucket (``repartition`` on the bucket columns uses the same hash
-    family as the bucket layout, so every output task holds whole
-    buckets), then swaps it in with a rename-out/rename-in sequence:
-    live table renamed aside to ``{table}__old``, compacted table
-    renamed in, the old copy dropped LAST.  The swap is not atomic —
-    concurrent probes can hit a missing-table window — but a crash at
-    any point leaves a recoverable state: the data always exists under
-    the public name, ``__old``, or ``__compact``; nothing is deleted
-    before its replacement is live.  OPERATING CONTRACT (ADVICE r6):
-    this is a SINGLE-WRITER batch-maintenance op; schedule it when no
-    probes run, or have probe jobs retry on ``TABLE_OR_VIEW_NOT_FOUND``
-    (the gap is two catalog renames wide).  If truly concurrent
-    probing is ever required, put a view in front of the table and
-    repoint it (``ALTER VIEW ... AS SELECT * FROM {table}__compact``)
-    so readers never see the gap — deliberately not done here because
-    a view-wrapped table loses the bucketed-scan guarantees the
-    zero-Exchange probe plan is pinned on.  Probe results are
-    bit-identical before and after (pinned by tests); only the file
-    layout changes.
-
-    Returns ``{table: files_after}`` for observability.  Cost: one
-    read + one write of the index tables — O(index), never O(corpus),
-    and ZERO shuffle: the read is forced onto the bucketed scan (one
-    input partition per bucket), so each task streams exactly its
-    bucket's files into one output file.  (The forced scan matters —
-    by default the planner collapses a ``repartition`` on the bucket
-    columns as "already satisfied" by the bucket spec and AQE then
-    disables the bucketed scan, leaving bucket-MIXED file splits that
-    re-fragment the write.)  Run it when file counts degrade, like any
-    LSM/Delta compaction.
+    ``{name}_sig`` and ``{name}_bands`` with one file per bucket under
+    their stored bucket specs, with zero shuffle; the operating
+    contract (single writer, non-atomic two-rename swap, crash states
+    always recoverable) is :mod:`.index`'s.  Probe results are
+    bit-identical before and after (pinned by tests).  Returns
+    ``{table: files_after}``.  Run it when file counts degrade, like
+    any LSM/Delta compaction.
     """
-    out: dict[str, int] = {}
-    specs = [
-        (f"{name}_sig", ["id"]),
-        (f"{name}_bands", ["band", "bhash"]),
-    ]
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev_auto = spark.conf.get(auto_key, "true")
-    spark.conf.set(auto_key, "false")
-    try:
-        for table, cols in specs:
-            describe = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-            info = {
-                r.col_name.strip(): (r.data_type or "").strip()
-                for r in describe
-            }
-            num_buckets = int(info["Num Buckets"])
-            tmp = f"{table}__compact"
-            old = f"{table}__old"
-            spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-            spark.sql(f"DROP TABLE IF EXISTS {old}")  # stale crash debris
-            (
-                spark.table(table)
-                .sortWithinPartitions(*cols)
-                .write.mode("overwrite")
-                .bucketBy(num_buckets, *cols)
-                .sortBy(*cols)
-                .saveAsTable(tmp)
-            )
-            # rename-out / rename-in / drop-last: recoverable at every
-            # step (see docstring) — never DROP before the replacement
-            # is live under the public name
-            spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
-            spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-            spark.sql(f"DROP TABLE {old}")
-            out[table] = len(spark.table(table).inputFiles())
-    finally:
-        spark.conf.set(auto_key, prev_auto)
-    return out
+    return compact_tables(spark, f"{name}_sig", f"{name}_bands")
 
 
 def _candidate_probe(

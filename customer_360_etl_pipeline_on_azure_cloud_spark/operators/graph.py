@@ -15,6 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .index import append_rows, open_table, reset_tables
+from .skew import write_bucketed
+
 
 def connected_components(
     edges: DataFrame,
@@ -877,8 +880,9 @@ def write_graph_index(
     iterative graph queries are DOMINATED by re-materializing the edge
     list (66 s build vs 2-3 s per relaxation round on the 24M-edge sf1
     co-purchase graph), and a standing corpus builds that graph ONCE,
-    appends daily (bucketed tables append per-bucket files), and runs
-    every BFS / route / rank probe against it.
+    appends daily (``mode="append"`` adds per-bucket files under the
+    table's stored bucket spec), and runs every BFS / route / rank
+    probe against it.
 
     Bucketing by ``u`` means frontier joins on the vertex key read
     matching buckets with no Exchange on the edge side when the probe
@@ -889,33 +893,19 @@ def write_graph_index(
     cols = [F.col(src).alias("u"), F.col(dst).alias("v")]
     if weight is not None:
         cols.append(F.col(weight).cast("long").alias("w"))
-    from .skew import write_bucketed
-
-    spark = edges.sparkSession
-    if mode == "overwrite":
-        # Same stale-location sweep as write_minhash_index: the default
-        # in-memory catalog forgets tables across sessions but leaves
-        # their warehouse directories, and saveAsTable refuses to adopt
-        # an existing location [LOCATION_ALREADY_EXISTS].
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        t = f"{name}_edges"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        path = spark._jvm.org.apache.hadoop.fs.Path(
-            f"{warehouse}/{t.lower()}"
-        )
-        fs = path.getFileSystem(hconf)
-        if fs.exists(path):
-            fs.delete(path, True)
-    write_bucketed(
-        edges.select(*cols), f"{name}_edges", "u",
-        num_buckets=num_buckets, sort_by="u", mode=mode,
-    )
+    rows, table = edges.select(*cols), f"{name}_edges"
+    if mode == "append":
+        append_rows(rows, table)
+    elif mode == "overwrite":
+        reset_tables(edges.sparkSession, table)
+        write_bucketed(rows, table, "u", num_buckets=num_buckets, sort_by="u")
+    else:
+        raise ValueError(f"write_graph_index: unknown mode {mode!r}")
 
 
 def read_graph_index(spark, name: str) -> DataFrame:
     """Reopen a :func:`write_graph_index` edge table."""
-    return spark.table(f"{name}_edges")
+    return open_table(spark, f"{name}_edges")
 
 
 def pagerank_weighted(
@@ -963,16 +953,21 @@ def pagerank_weighted(
     )
     if not materialized:
         e = e.persist(StorageLevel.DISK_ONLY)
-    guard = e.agg(
-        F.max("w").alias("mx"), F.min("w").alias("mn")
-    ).collect()[0]
-    if guard["mn"] is not None and guard["mn"] <= 0:
-        raise ValueError("pagerank_weighted: weights must be positive")
-    if guard["mx"] is not None and scale * guard["mx"] >= 2**63:
-        raise ValueError(
-            f"pagerank_weighted: scale*max(w) = {scale * guard['mx']} "
-            "overflows int64; lower scale or rescale weights"
-        )
+    try:
+        guard = e.agg(
+            F.max("w").alias("mx"), F.min("w").alias("mn")
+        ).collect()[0]
+        if guard["mn"] is not None and guard["mn"] <= 0:
+            raise ValueError("pagerank_weighted: weights must be positive")
+        if guard["mx"] is not None and scale * guard["mx"] >= 2**63:
+            raise ValueError(
+                f"pagerank_weighted: scale*max(w) = {scale * guard['mx']} "
+                "overflows int64; lower scale or rescale weights"
+            )
+    except BaseException:
+        if not materialized:
+            e.unpersist()
+        raise
     verts = (
         e.select(F.explode(F.array("u", "v")).alias("id"))
         .distinct()

@@ -25,6 +25,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .index import (
+    append_rows,
+    compact_tables,
+    open_table,
+    read_meta,
+    reset_tables,
+    write_rows,
+)
+from .skew import write_bucketed
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product of two array<double> columns."""
@@ -1005,8 +1015,6 @@ def write_ivf_index(
     :func:`append_ivf_index`, which reuses the STORED centroids;
     :func:`compact_ivf_index` handles the resulting small files.
     """
-    from .skew import write_bucketed
-
     spark = corpus.sparkSession
     if mode != "overwrite":
         raise ValueError(
@@ -1015,17 +1023,7 @@ def write_ivf_index(
             "under a different quantizer would corrupt the index; "
             "append daily arrivals with append_ivf_index instead"
         )
-    if mode == "overwrite":
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        for t in (f"{name}_cells", f"{name}_centroids", f"{name}_meta"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            path = spark._jvm.org.apache.hadoop.fs.Path(
-                f"{warehouse}/{t.lower()}"
-            )
-            fs = path.getFileSystem(hconf)
-            if fs.exists(path):
-                fs.delete(path, True)
+    reset_tables(spark, f"{name}_cells", f"{name}_centroids", f"{name}_meta")
     if centroid_fit == "distributed":
         centroids = kmeans_distributed(
             corpus, k=n_centroids, id_col=id_col, vec_col=vec_col
@@ -1054,34 +1052,36 @@ def write_ivf_index(
     assigned = _ivf_assign(corpus, centroids, id_col, vec_col)
     write_bucketed(
         assigned, f"{name}_cells",
-        bucket_by="cell", num_buckets=num_buckets, sort_by="cell", mode=mode,
+        bucket_by="cell", num_buckets=num_buckets, sort_by="cell",
     )
-    spark.createDataFrame(
+    _write_centroids(spark, f"{name}_centroids", centroids)
+    write_rows(
+        spark, f"{name}_meta", [(len(centroids), sample_size)],
+        "n_centroids int, sample_size int",
+    )
+
+
+def _write_centroids(spark, table: str, centroids) -> None:
+    """The coarse quantizer of an IVF or IVFPQ index: (cell, centroid)."""
+    write_rows(
+        spark, table,
         [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
         "cell int, centroid array<double>",
-    ).write.mode(mode).saveAsTable(f"{name}_centroids")
-    spark.createDataFrame(
-        [(len(centroids), sample_size)], "n_centroids int, sample_size int"
-    ).write.mode(mode).saveAsTable(f"{name}_meta")
+    )
+
+
+def _read_centroids(spark, table: str) -> list[list[float]]:
+    """Inverse of :func:`_write_centroids`, in cell order."""
+    rows = open_table(spark, table).collect()
+    return [list(r.centroid) for r in sorted(rows, key=lambda r: r.cell)]
 
 
 def read_ivf_index(spark, name: str) -> IvfIndex:
     """Open a persisted IVF index written by :func:`write_ivf_index`."""
-    metas = spark.table(f"{name}_meta").collect()
-    if len(metas) != 1:
-        raise ValueError(
-            f"read_ivf_index: {name}_meta has {len(metas)} rows — the "
-            "index metadata was corrupted (a valid index has exactly "
-            "one; append_ivf_index never adds meta rows)"
-        )
-    meta = metas[0]
-    cents = spark.table(f"{name}_centroids").collect()
-    centroids = [
-        list(r.centroid) for r in sorted(cents, key=lambda r: r.cell)
-    ]
+    meta = read_meta(spark, f"{name}_meta")
     return IvfIndex(
-        assignments=spark.table(f"{name}_cells"),
-        centroids=centroids,
+        assignments=open_table(spark, f"{name}_cells"),
+        centroids=_read_centroids(spark, f"{name}_centroids"),
         n_centroids=meta.n_centroids,
     )
 
@@ -1107,84 +1107,29 @@ def append_ivf_index(
     audit centroid drift as the appended distribution diverges from
     the one the quantizer was fit on.
     """
-    from .skew import write_bucketed
-
-    spark = new_vectors.sparkSession
-    idx = read_ivf_index(spark, name)
+    idx = read_ivf_index(new_vectors.sparkSession, name)
     centroids = np.asarray(idx.centroids, dtype=np.float64)
-    describe = spark.sql(f"DESCRIBE FORMATTED {name}_cells").collect()
-    info = {
-        r.col_name.strip(): (r.data_type or "").strip() for r in describe
-    }
-    num_buckets = int(info["Num Buckets"])
-    assigned = _ivf_assign(new_vectors, centroids, id_col, vec_col)
-    write_bucketed(
-        assigned, f"{name}_cells",
-        bucket_by="cell", num_buckets=num_buckets, sort_by="cell",
-        mode="append",
+    append_rows(
+        _ivf_assign(new_vectors, centroids, id_col, vec_col), f"{name}_cells"
     )
 
 
 def compact_ivf_index(spark, name: str) -> dict[str, int]:
-    """Compact ``{name}_cells`` after daily appends — same contract and
-    same rename-out/rename-in swap as ``dedup.compact_minhash_index``:
-    one file per cell bucket, zero shuffle (forced bucketed scan), probe
-    results bit-identical before and after (test-pinned), recoverable
-    at every step (data lives under the public name, ``__old``, or
-    ``__compact``; nothing deleted before its replacement is live).
+    """Compact ``{name}_cells`` after daily appends: one file per cell
+    bucket, zero shuffle, probe results bit-identical before and after
+    (test-pinned), under :mod:`.index`'s operating contract.
     Centroids and meta are single-write tables and never need
     compaction.  Returns ``{table: files_after}``."""
-    return _compact_cell_table(spark, f"{name}_cells")
+    return compact_tables(spark, f"{name}_cells")
 
 
 def compact_ivfpq_index(spark, name: str) -> dict[str, int]:
     """Compact ``{name}_codes`` after :func:`append_ivfpq_index`
-    batches — the identical one-file-per-bucket, zero-shuffle,
-    recoverable-swap recipe as :func:`compact_ivf_index` (probe
-    bit-identity across compaction is test-pinned).  Quantizer tables
-    are single-write and never need compaction."""
-    return _compact_cell_table(spark, f"{name}_codes")
-
-
-def _compact_cell_table(spark, table: str) -> dict[str, int]:
-    """One-file-per-bucket rewrite of a cell-bucketed table with the
-    rename-out/rename-in/drop-last swap (crash at any step leaves the
-    data live under the public name, ``__old``, or ``__compact``).
-    Single-writer batch op: the two-rename swap is not atomic, so
-    schedule compaction when no probes run or retry probes on
-    TABLE_OR_VIEW_NOT_FOUND — same operating contract as
-    ``compact_minhash_index`` (see its docstring for the view-based
-    alternative and why it is deliberately not used)."""
-    out: dict[str, int] = {}
-    cols = ["cell"]
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev_auto = spark.conf.get(auto_key, "true")
-    spark.conf.set(auto_key, "false")
-    try:
-        describe = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-        info = {
-            r.col_name.strip(): (r.data_type or "").strip()
-            for r in describe
-        }
-        num_buckets = int(info["Num Buckets"])
-        tmp, old = f"{table}__compact", f"{table}__old"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        spark.sql(f"DROP TABLE IF EXISTS {old}")
-        (
-            spark.table(table)
-            .sortWithinPartitions(*cols)
-            .write.mode("overwrite")
-            .bucketBy(num_buckets, *cols)
-            .sortBy(*cols)
-            .saveAsTable(tmp)
-        )
-        spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
-        spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-        spark.sql(f"DROP TABLE {old}")
-        out[table] = len(spark.table(table).inputFiles())
-    finally:
-        spark.conf.set(auto_key, prev_auto)
-    return out
+    batches — the same one-file-per-bucket rewrite as
+    :func:`compact_ivf_index` (probe bit-identity across compaction is
+    test-pinned).  Quantizer tables are single-write and never need
+    compaction."""
+    return compact_tables(spark, f"{name}_codes")
 
 
 def ivf_cell_cohesion(spark, name: str) -> DataFrame:
@@ -1208,7 +1153,7 @@ def ivf_cell_cohesion(spark, name: str) -> DataFrame:
         F.col("nnorm") * cnorm
     )
     per_cell = (
-        spark.table(f"{name}_cells")
+        idx.assignments
         .join(F.broadcast(cents), "cell")
         .groupBy("cell")
         .agg(
@@ -2701,8 +2646,8 @@ def write_ivfpq_index(
     its exact refinement step.  As with the IVF index, a fresh build
     fits fresh data-dependent quantizers, so only ``mode="overwrite"``
     is valid; daily arrivals go through :func:`append_ivfpq_index`
-    (stored quantizers reused), and ``compact_ivf_index``'s swap
-    recipe applies to ``{name}_codes`` unchanged.
+    (stored quantizers reused), and :func:`compact_ivfpq_index`
+    compacts ``{name}_codes``.
 
     Scratch-disk note for billion-vector builds: the distributed fit
     persists ONE corpus-sized frame (the shared ``(id, cell, resid)``
@@ -2712,8 +2657,6 @@ def write_ivfpq_index(
     (plus the normalized-corpus Lloyd frame during the coarse fit
     only), not a second fixed-point copy on top.
     """
-    from .skew import write_bucketed
-
     spark = corpus.sparkSession
     if mode != "overwrite":
         raise ValueError(
@@ -2721,16 +2664,10 @@ def write_ivfpq_index(
             "fresh build fits fresh quantizers; append daily arrivals "
             "with append_ivfpq_index instead"
         )
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    for t in (
-        f"{name}_codes", f"{name}_centroids", f"{name}_books", f"{name}_meta"
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        path = spark._jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{t.lower()}")
-        fs = path.getFileSystem(hconf)
-        if fs.exists(path):
-            fs.delete(path, True)
+    reset_tables(
+        spark,
+        f"{name}_codes", f"{name}_centroids", f"{name}_books", f"{name}_meta",
+    )
     cents, books, assigned = _ivfpq_fit(
         corpus, n_centroids, m, ksub, sample_size, id_col, vec_col,
         codebook_fit=codebook_fit, return_assigned=True,
@@ -2746,27 +2683,25 @@ def write_ivfpq_index(
         write_bucketed(
             coded, f"{name}_codes",
             bucket_by="cell", num_buckets=num_buckets, sort_by="cell",
-            mode=mode,
         )
     finally:
         if assigned is not None:
             assigned.unpersist()
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, centroid array<double>",
-    ).write.mode(mode).saveAsTable(f"{name}_centroids")
-    spark.createDataFrame(
+    _write_centroids(spark, f"{name}_centroids", cents)
+    write_rows(
+        spark, f"{name}_books",
         [
             (j, c, [float(x) for x in books[j, c]])
             for j in range(books.shape[0])
             for c in range(books.shape[1])
         ],
         "subspace int, code int, centroid array<double>",
-    ).write.mode(mode).saveAsTable(f"{name}_books")
-    spark.createDataFrame(
+    )
+    write_rows(
+        spark, f"{name}_meta",
         [(len(cents), int(books.shape[0]), int(books.shape[1]), sample_size)],
         "n_centroids int, m int, ksub int, sample_size int",
-    ).write.mode(mode).saveAsTable(f"{name}_meta")
+    )
 
 
 def read_ivfpq_index(spark, name: str):
@@ -2774,32 +2709,17 @@ def read_ivfpq_index(spark, name: str):
     centroids ndarray, books ndarray, meta Row)``.  Both quantizers
     are driver-sized by construction (n_centroids x d + m x ksub x
     d/m doubles)."""
-    metas = spark.table(f"{name}_meta").collect()
-    if len(metas) != 1:
-        raise ValueError(
-            f"read_ivfpq_index: {name}_meta has {len(metas)} rows — "
-            "corrupted (a valid index has exactly one; "
-            "append_ivfpq_index never adds meta rows)"
-        )
-    meta = metas[0]
-    cents = np.array(
-        [
-            list(r.centroid)
-            for r in sorted(
-                spark.table(f"{name}_centroids").collect(),
-                key=lambda r: r.cell,
-            )
-        ]
-    )
+    meta = read_meta(spark, f"{name}_meta")
+    cents = np.array(_read_centroids(spark, f"{name}_centroids"))
     brows = sorted(
-        spark.table(f"{name}_books").collect(),
+        open_table(spark, f"{name}_books").collect(),
         key=lambda r: (r.subspace, r.code),
     )
     dsub = len(brows[0].centroid)
     books = np.array([list(r.centroid) for r in brows]).reshape(
         meta.m, meta.ksub, dsub
     )
-    return spark.table(f"{name}_codes"), cents, books, meta
+    return open_table(spark, f"{name}_codes"), cents, books, meta
 
 
 def append_ivfpq_index(
@@ -2815,18 +2735,10 @@ def append_ivfpq_index(
     are never re-read or re-encoded, and the quantizer tables are
     untouched, so every probe before and after sees the SAME
     quantizers (the append_ivf_index contract, compressed form)."""
-    from .skew import write_bucketed
-
-    spark = new_vectors.sparkSession
-    _, cents, books, _meta = read_ivfpq_index(spark, name)
-    describe = spark.sql(f"DESCRIBE FORMATTED {name}_codes").collect()
-    info = {r.col_name.strip(): (r.data_type or "").strip() for r in describe}
-    num_buckets = int(info["Num Buckets"])
-    coded = _ivfpq_encode(new_vectors, cents, books, id_col, vec_col)
-    write_bucketed(
-        coded, f"{name}_codes",
-        bucket_by="cell", num_buckets=num_buckets, sort_by="cell",
-        mode="append",
+    _, cents, books, _meta = read_ivfpq_index(new_vectors.sparkSession, name)
+    append_rows(
+        _ivfpq_encode(new_vectors, cents, books, id_col, vec_col),
+        f"{name}_codes",
     )
 
 

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..schemas import TESTDATA_TABLES
+from ..session import tune
 
 
 def _ensure_utc(spark: SparkSession) -> None:
@@ -57,6 +58,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             _ensure_utc(spark)
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """:func:`load_table` for the query modules, which all run on a
+    session tuned with 32 shuffle partitions."""
+    tune(spark, shuffle_partitions=32)
+    return load_table(spark, sf_dir, name)
 
 
 def event_ts(df: DataFrame, col: str = "ts") -> DataFrame:

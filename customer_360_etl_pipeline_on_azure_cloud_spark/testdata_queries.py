@@ -37,7 +37,7 @@ from .operators.sets import union_by_name_all
 from .operators.windows import top_k_per_group
 from .operators.util import sf_tag
 from .session import tune
-from .sources.tables import load_table
+from .sources.tables import _t
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -46,11 +46,6 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 #: SQL twin of functions.scalar.money_cents — keep in lockstep.
 def _cents_sql(col: str) -> str:
     return f"CAST(ROUND({col} * 100, 0) AS BIGINT)"
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark, shuffle_partitions=32)
-    return load_table(spark, sf_dir, name)
 
 
 #: Month-count buckets for the activeness analogues (reference buckets are

@@ -31,13 +31,7 @@ from .operators.text import (
     gopher_rules,
     unigram_nll,
 )
-from .session import tune
-from .sources.tables import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark, shuffle_partitions=32)
-    return load_table(spark, sf_dir, name)
+from .sources.tables import _t
 
 
 # --- leakage-safe cluster-aware dataset split --------------------------------

@@ -830,18 +830,80 @@ def test_graph_index_append_extends_the_graph(spark):
     assert after == {1: 0, 2: 1, 3: 2}
 
 
-def test_graph_index_overwrite_survives_stale_location(spark):
-    """The cross-session LOCATION_ALREADY_EXISTS path: dropping the
-    catalog entry while the warehouse dir remains must not break the
-    next overwrite (the failure quick_subset_check hit live)."""
+@pytest.mark.parametrize("kind", ["graph", "minhash", "ivf", "ivfpq"])
+def test_graph_index_overwrite_survives_stale_location(spark, tmp_path, kind):
+    """The cross-session LOCATION_ALREADY_EXISTS path: a catalog that
+    forgot the index tables while their warehouse dirs remain must not
+    break the next overwrite (the failure quick_subset_check hit live),
+    and the stale files must not be adopted — for every index kind."""
+    import os
+    import shutil
+
+    from customer_360_etl_pipeline_on_azure_cloud_spark.operators.dedup import (
+        read_minhash_index,
+        write_minhash_index,
+    )
     from customer_360_etl_pipeline_on_azure_cloud_spark.operators.graph import (
         read_graph_index,
         write_graph_index,
     )
+    from customer_360_etl_pipeline_on_azure_cloud_spark.operators.similarity import (
+        read_ivf_index,
+        read_ivfpq_index,
+        write_ivf_index,
+        write_ivfpq_index,
+    )
 
-    e = spark.createDataFrame([(1, 2, 1)], "u long, v long, w long")
-    write_graph_index(e, "t_gidx_stale", num_buckets=2)
-    # simulate a fresh session's catalog: table forgotten, files left
-    spark.sql("DROP TABLE t_gidx_stale_edges")
-    write_graph_index(e, "t_gidx_stale", num_buckets=2)
-    assert read_graph_index(spark, "t_gidx_stale").count() == 1
+    name = f"t_stale_{kind}"
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0, float(i % 7)]) for i in range(32)],
+        "vec_id long, embedding array<double>",
+    )
+    write, read, suffixes, n = {
+        "graph": (
+            lambda: write_graph_index(
+                spark.createDataFrame([(1, 2, 1)], "u long, v long, w long"),
+                name, num_buckets=2,
+            ),
+            lambda: read_graph_index(spark, name),
+            ["_edges"],
+            1,
+        ),
+        "minhash": (
+            lambda: write_minhash_index(
+                spark.createDataFrame(
+                    [(1, "alpha beta gamma delta"), (2, "beta gamma delta eps")],
+                    "doc_id long, text string",
+                ),
+                name, num_buckets=2,
+            ),
+            lambda: read_minhash_index(spark, name).sig,
+            ["_sig", "_bands", "_meta"],
+            2,
+        ),
+        "ivf": (
+            lambda: write_ivf_index(vecs, name, n_centroids=2, num_buckets=2),
+            lambda: read_ivf_index(spark, name).assignments,
+            ["_cells", "_centroids", "_meta"],
+            32,
+        ),
+        "ivfpq": (
+            lambda: write_ivfpq_index(
+                vecs, name, n_centroids=2, m=2, ksub=2, num_buckets=2
+            ),
+            lambda: read_ivfpq_index(spark, name)[0],
+            ["_codes", "_centroids", "_books", "_meta"],
+            32,
+        ),
+    }[kind]
+    write()
+    # simulate a fresh session's catalog: tables forgotten, files left
+    # (DROP TABLE deletes a managed table's dir, so put a copy back)
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    for suffix in suffixes:
+        table_dir = os.path.join(warehouse, f"{name}{suffix}")
+        shutil.copytree(table_dir, tmp_path / suffix)
+        spark.sql(f"DROP TABLE {name}{suffix}")
+        shutil.copytree(tmp_path / suffix, table_dir)
+    write()
+    assert read().count() == n

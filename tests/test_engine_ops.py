@@ -14,6 +14,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import SF_SMALL
 from customer_360_etl_pipeline_on_azure_cloud_spark.operators.graph import (
     pagerank_fixed,
 )
@@ -230,6 +231,187 @@ def test_compact_minhash_index_preserves_probe(spark):
         for suffix in ("_sig", "_bands", "_meta"):
             spark.sql(f"DROP TABLE IF EXISTS {name}{suffix}")
             spark.sql(f"DROP TABLE IF EXISTS {name}{suffix}__compact")
+
+
+def _mh_index_split(spark):
+    """(corpus, day-1 batch, probe batch) of the sf0.001 documents."""
+    from customer_360_etl_pipeline_on_azure_cloud_spark.sources.tables import (
+        load_table,
+    )
+
+    docs = load_table(spark, SF_SMALL, "documents")
+    return (
+        docs.filter(F.col("doc_id") % 5 != 0),
+        docs.filter(F.col("doc_id") % 10 == 0),
+        docs.filter((F.col("doc_id") % 5 == 0) & (F.col("doc_id") % 10 != 0)),
+    )
+
+
+def _drop_index_tables(spark, name, suffixes):
+    for suffix in suffixes:
+        for debris in ("", "__compact", "__old"):
+            spark.sql(f"DROP TABLE IF EXISTS {name}{suffix}{debris}")
+
+
+def test_minhash_index_append_keeps_one_meta_row(spark):
+    """An append adds no meta row, and an append whose (num_hashes,
+    bands, shingle_n) differ from the stored ones is refused before it
+    writes anything; a corrupted meta table fails the open."""
+    from customer_360_etl_pipeline_on_azure_cloud_spark.operators.dedup import (
+        read_minhash_index,
+        write_minhash_index,
+    )
+
+    corpus, day1, _ = _mh_index_split(spark)
+    name = "t_mh_append_meta"
+    try:
+        write_minhash_index(corpus, name, num_hashes=32, bands=8,
+                            num_buckets=4)
+        write_minhash_index(day1, name, num_hashes=32, bands=8,
+                            num_buckets=4, mode="append")
+        assert spark.table(f"{name}_meta").count() == 1
+        n_sig = spark.table(f"{name}_sig").count()
+        with pytest.raises(ValueError, match="append params"):
+            write_minhash_index(day1, name, num_hashes=64, bands=8,
+                                num_buckets=4, mode="append")
+        assert spark.table(f"{name}_sig").count() == n_sig
+        assert spark.table(f"{name}_meta").count() == 1
+        assert read_minhash_index(spark, name).num_hashes == 32
+        spark.createDataFrame(
+            [(64, 8, 3)], "num_hashes int, bands int, shingle_n int"
+        ).write.mode("append").saveAsTable(f"{name}_meta")
+        with pytest.raises(ValueError, match="exactly one"):
+            read_minhash_index(spark, name)
+    finally:
+        _drop_index_tables(spark, name, ("_sig", "_bands", "_meta"))
+
+
+@pytest.mark.parametrize("crash_at", ["rename_out", "rename_in"])
+def test_compaction_crash_is_recoverable(spark, monkeypatch, crash_at):
+    """A compaction that dies after ``{table}__compact`` is written
+    loses no row.  Dying before the swap leaves every row readable under
+    the public name; dying between the two renames leaves it under
+    ``__old``, which the next compaction renames back.  Either way the
+    next compaction succeeds and the probe is bit-identical."""
+    from customer_360_etl_pipeline_on_azure_cloud_spark.operators.dedup import (
+        compact_minhash_index,
+        minhash_lsh_join,
+        read_minhash_index,
+        write_minhash_index,
+    )
+
+    corpus, day1, probe = _mh_index_split(spark)
+    name = f"t_mh_crash_{crash_at}"
+    suffixes = ("_sig", "_bands", "_meta")
+
+    def snapshot():
+        idx = read_minhash_index(spark, name)
+        pairs = {tuple(r) for r in minhash_lsh_join(probe, idx).collect()}
+        return idx.sig.count(), idx.bands.count(), pairs
+
+    try:
+        write_minhash_index(corpus, name, num_hashes=32, bands=8,
+                            num_buckets=4)
+        write_minhash_index(day1, name, num_hashes=32, bands=8,
+                            num_buckets=4, mode="append")
+        before = snapshot()
+        assert before[2]
+        crash_stmt = {
+            "rename_out": f"RENAME TO {name}_sig__old",
+            "rename_in": f"RENAME TO {name}_sig",
+        }[crash_at]
+        real_sql = spark.sql
+
+        def crashing_sql(query, *args, **kwargs):
+            if query.endswith(crash_stmt):
+                raise RuntimeError("injected crash")
+            return real_sql(query, *args, **kwargs)
+
+        monkeypatch.setattr(spark, "sql", crashing_sql)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            compact_minhash_index(spark, name)
+        monkeypatch.undo()
+        assert spark.catalog.tableExists(f"{name}_sig__compact")
+        if crash_at == "rename_out":
+            assert snapshot() == before
+        else:
+            assert not spark.catalog.tableExists(f"{name}_sig")
+            assert spark.catalog.tableExists(f"{name}_sig__old")
+        counts = compact_minhash_index(spark, name)
+        assert counts[f"{name}_sig"] <= 4
+        assert counts[f"{name}_bands"] <= 4
+        assert snapshot() == before
+        for suffix in suffixes:
+            for debris in ("__compact", "__old"):
+                assert not spark.catalog.tableExists(f"{name}{suffix}{debris}")
+    finally:
+        _drop_index_tables(spark, name, suffixes)
+
+
+def test_compaction_sees_rows_appended_by_a_stream(spark, tmp_path):
+    """``run_foreach_batch`` appends in the stream's cloned session; a
+    compaction run from the caller's session, with no manual refresh,
+    must keep those rows."""
+    import numpy as np
+
+    from customer_360_etl_pipeline_on_azure_cloud_spark.operators.dedup import (
+        compact_minhash_index,
+        read_minhash_index,
+        write_minhash_index,
+    )
+    from customer_360_etl_pipeline_on_azure_cloud_spark.operators.similarity import (
+        append_ivf_index,
+        compact_ivf_index,
+        read_ivf_index,
+        write_ivf_index,
+    )
+    from customer_360_etl_pipeline_on_azure_cloud_spark.streaming.incremental import (
+        run_foreach_batch,
+        stream_file_source,
+    )
+
+    rng = np.random.default_rng(7)
+    words = [f"w{i}" for i in range(300)]
+    rows = [
+        (
+            i,
+            " ".join(rng.choice(words, 12)),
+            [float(x) for x in rng.standard_normal(8)],
+        )
+        for i in range(240)
+    ]
+    schema = "doc_id long, text string, embedding array<float>"
+    landing = tmp_path / "landing"
+    spark.createDataFrame(rows[200:], schema).coalesce(1).write.parquet(
+        str(landing)
+    )
+    base = spark.createDataFrame(rows[:200], schema)
+    try:
+        write_minhash_index(base, "t_xs_mh", num_buckets=4)
+        write_ivf_index(base, "t_xs_ivf", n_centroids=4, num_buckets=4,
+                        id_col="doc_id")
+        # the caller probes the standing index before the day's ingest
+        assert read_minhash_index(spark, "t_xs_mh").sig.count() == 200
+        assert read_ivf_index(spark, "t_xs_ivf").assignments.count() == 200
+
+        def append(batch_df, _batch_id):
+            write_minhash_index(batch_df, "t_xs_mh", num_buckets=4,
+                                mode="append")
+            append_ivf_index(batch_df, "t_xs_ivf", id_col="doc_id")
+
+        stream = stream_file_source(spark, str(landing), base.schema)
+        run_foreach_batch(stream, str(tmp_path / "ckpt"), append)
+        compact_minhash_index(spark, "t_xs_mh")
+        compact_ivf_index(spark, "t_xs_ivf")
+        spark.catalog.refreshTable("t_xs_mh_sig")
+        spark.catalog.refreshTable("t_xs_ivf_cells")
+        assert spark.table("t_xs_mh_sig").count() == 240
+        assert spark.table("t_xs_ivf_cells").count() == 240
+    finally:
+        _drop_index_tables(spark, "t_xs_mh", ("_sig", "_bands", "_meta"))
+        _drop_index_tables(
+            spark, "t_xs_ivf", ("_cells", "_centroids", "_meta")
+        )
 
 
 # --- row-level DQ enforcement (quarantine) -----------------------------------

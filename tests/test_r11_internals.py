@@ -102,6 +102,14 @@ def test_pagerank_interval_guard(spark):
         sc.setLocalProperty("spark.job.description", None)
     assert list(sc.statusTracker().getJobIdsForGroup("pagerank_interval_guard")) == []
     assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
+    # the weight guard is data-dependent, so it runs a job, but it
+    # releases the edges it persisted before raising
+    zero_w = spark.createDataFrame([(1, 2, 0), (2, 1, 3)], "u long, v long, w long")
+    with pytest.raises(ValueError, match="positive"):
+        pagerank_weighted(zero_w)
+    with pytest.raises(ValueError, match="overflows"):
+        pagerank_weighted(we, scale=2**62)
+    assert set(sc._jsc.getPersistentRDDs().keySet()) == persisted
 
 
 # --- exact_cross_pairs cross-rank-only join ---------------------------------
