@@ -8,15 +8,120 @@ and it is the step that turns "we found the duplicates" into "here is
 the corpus with one survivor per duplicate cluster" (the standard
 LLM-corpus dedup recipe: candidate pairs -> components -> keep
 min-id doc per component).
+
+Rounds and convergence — the contract of every iterative operator in
+this module; the per-function docstrings point here:
+
+* **A round is one checkpoint job.**  :func:`_materialize` checkpoints
+  a round's state with ``localCheckpoint(eager=True)`` and attaches an
+  ``Observation``, so the one scalar the driver needs next (labels
+  changed, edges rewired, vertices below ``k``, frontier or vertex
+  count) is computed by the checkpoint's own job.  No count, join or
+  ``exceptAll`` follows a checkpoint to decide whether to go on, and
+  only that scalar reaches the driver, never data.  The checkpoint
+  truncates lineage, so plans stay O(1) across rounds.
+* **``max_iter`` is a budget.**  The fixpoint loops
+  (:func:`connected_components` with either algorithm, :func:`k_core`)
+  run through :func:`_fixpoint`.  An observed count of 0 proves the
+  state is a fixed point; the loop stops there and returns, also when
+  that happens on the last allowed round, or before any round when
+  the input already is one (no edge, no vertex below ``k``).  A budget
+  spent while the state still changes raises ``RuntimeError``
+  ("``<op>: did not reach a fixed point within max_iter=N rounds``"):
+  the state at that point is a silent non-fixpoint (extra components,
+  a superset of the core).  A label-propagation round proves its
+  fixpoint only by changing nothing, so :func:`connected_components`
+  needs one round more than the longest label or edge change chain.
+* **Declared round counts run as declared.**  :func:`label_propagation`,
+  :func:`min_cost_bounded` and the PageRanks run exactly the rounds
+  asked for, and :func:`bfs_hops` stops early only on an empty
+  frontier; none of them has a fixpoint to miss.
+* **Checkpoints are not unpersisted.**  ``unpersist()`` on a
+  ``localCheckpoint``ed frame frees nothing; the ContextCleaner drops
+  its blocks once the frame is garbage-collected.  Only edge copies
+  made with ``persist()`` are released by hand.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from contextlib import contextmanager
+
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .index import append_rows, open_table, reset_tables
 from .skew import write_bucketed
+
+
+def _materialize(
+    df: DataFrame, metric: Column, *drop: str
+) -> tuple[DataFrame, int]:
+    """One round's state: ``df`` checkpointed eagerly, with ``metric``
+    (an aggregate over ``df``'s rows) observed by the checkpoint's own
+    job.  Columns named in ``drop`` feed only the metric and are left
+    out of the checkpoint."""
+    obs = Observation()
+    cp = (
+        df.observe(obs, metric.alias("m"))
+        .drop(*drop)
+        .localCheckpoint(eager=True)
+    )
+    return cp, obs.get["m"]
+
+
+def _fixpoint(op, step, state, pending: int, max_iter: int, what: str):
+    """Replace ``state`` by ``step(state) -> (state, pending)`` until
+    ``pending`` is 0, within ``max_iter`` rounds; raises on a spent
+    budget (see the module docstring)."""
+    for _ in range(max_iter):
+        if not pending:
+            break
+        state, pending = step(state)
+    if pending:
+        raise RuntimeError(
+            f"{op}: did not reach a fixed point within max_iter={max_iter} "
+            f"rounds ({pending} {what}); raise max_iter"
+        )
+    return state
+
+
+@contextmanager
+def _edge_join(e: DataFrame, broadcast_limit: int):
+    """Yield ``expand(side, n)``: edges ``e`` joined to the vertex-sized
+    ``side`` on ``e.u == side.id``, where ``n`` is ``side``'s exact row
+    count as its round observed it (planner size estimates on
+    checkpointed frames are not trusted: letting the planner pick
+    broadcast chose the EDGE side, a driver OOM at sf0.1).
+
+    Up to ``broadcast_limit`` rows, ``side`` is broadcast and the round
+    is a map-side pass over the edges with no exchange (7.5 s to
+    sub-second per round on the sf0.1 co-purchase graph).  Past it, a
+    shuffled hash join whose BUILD side is ``side``, never the edges:
+    an edge-side build is |E|/partitions rows per task, and AQE's
+    partition coalescing concentrates it (at sf10, 8 partitions x ~10M
+    edges failed to build a >1 GB hash relation).  The edges are then
+    repartitioned on ``u`` once into a DISK_ONLY copy (InMemoryRelation
+    keeps the partitioning, so later rounds shuffle only ``side``; heap
+    caching of an edge list is the known OOM), built only when a round
+    first needs it and released on exit."""
+    shj: list[DataFrame] = []
+
+    def expand(side: DataFrame, n: int) -> DataFrame:
+        if n <= broadcast_limit:
+            return e.join(F.broadcast(side), e["u"] == side["id"])
+        if not shj:
+            shj.append(
+                e.repartition(F.col("u")).persist(StorageLevel.DISK_ONLY)
+            )
+        edge = shj[0]
+        return side.hint("shuffle_hash").join(edge, side["id"] == edge["u"])
+
+    try:
+        yield expand
+    finally:
+        for copy in shj:
+            copy.unpersist()
 
 
 def connected_components(
@@ -56,9 +161,9 @@ def connected_components(
     the default because dedup graphs are usually shallow and its
     constant per round is smaller.
 
-    The driver-side loop is control flow only — per round it moves one
-    scalar (the changed-label count / fixpoint flag) to the driver,
-    never data.
+    ``max_iter`` bounds the rounds of either algorithm; a graph that
+    needs more raises instead of returning a non-fixpoint labeling
+    (rounds and convergence: see the module docstring).
     """
     if algorithm not in ("hash_min", "two_phase"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
@@ -75,30 +180,32 @@ def connected_components(
         verts.distinct().select("id", F.col("id").alias("component"))
         .localCheckpoint(eager=True)
     )
-    sym = sym.distinct().localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        # neighbor labels flow along edges; a vertex keeps its own label
-        # in the running via the union, then takes the min
+    sym, pending = _materialize(
+        sym.distinct(), F.count_if(F.col("u") != F.col("v"))
+    )
+
+    def step(labels: DataFrame) -> tuple[DataFrame, int]:
+        # neighbor labels flow along edges; a vertex's own row keeps its
+        # label in the running and carries it as ``old`` through the min
         msgs = sym.join(labels, sym["u"] == labels["id"]).select(
-            F.col("v").alias("id"), F.col("component")
+            F.col("v").alias("id"), "component", F.lit(None).alias("old")
         )
-        new_labels = (
-            labels.union(msgs)
+        return _materialize(
+            labels.withColumn("old", F.col("component"))
+            .union(msgs)
             .groupBy("id")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
+            .agg(
+                F.min("component").alias("component"),
+                F.min("old").alias("old"),
+            ),
+            F.count_if(F.col("component") != F.col("old")),
+            "old",
         )
-        changed = (
-            new_labels.join(
-                labels.withColumnRenamed("component", "old"), "id"
-            )
-            .filter(F.col("component") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+
+    return _fixpoint(
+        "connected_components", step, labels, pending, max_iter,
+        "labels changed in the last round",
+    )
 
 
 def _two_phase_components(
@@ -118,22 +225,28 @@ def _two_phase_components(
     minima, reached in O(log^2 n) rounds on ANY graph shape — path
     graphs included, where label propagation needs diameter rounds.
     Each phase costs one groupBy shuffle + one self-join on the same
-    key; edges are localCheckpoint'ed per round so the plan stays O(1).
-    The convergence probe moves one boolean to the driver (count +
-    exceptAll emptiness), never data.
+    key and is one checkpoint job.
+
+    Convergence is an exact set test: every output row of a phase is
+    its input edge rewired, flagged ``moved`` unless it is the input
+    edge itself (large-star: ``u`` is its neighborhood minimum;
+    small-star: ``v`` is ``u``'s minimum neighbor).  With no row moved
+    in either phase the round maps the edge set onto itself, and the
+    only sets a round maps onto themselves are the fixpoint star
+    forests, where no row moves.  The phases observe the moved-edge
+    counts (module docstring).
     """
-    edges = (
-        sym.filter(F.col("u") != F.col("v"))
-        .select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+
+    def edge_set(rows: DataFrame) -> tuple[DataFrame, int]:
+        return _materialize(
+            rows.filter(F.col("u") != F.col("v"))
+            .groupBy("u", "v")
+            .agg(F.max("moved").alias("moved")),
+            F.count_if("moved"),
+            "moved",
         )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = edges.count()
-    for _ in range(max_iter):
-        if n_edges == 0:
-            break
+
+    def step(edges: DataFrame) -> tuple[DataFrame, int]:
         # --- large-star: symmetric neighborhoods, larger neighbors hook
         # onto the neighborhood minimum (which includes u itself).
         nbr = edges.union(
@@ -144,32 +257,45 @@ def _two_phase_components(
             .agg(F.min("v").alias("mv"))
             .select("u", F.least("mv", F.col("u")).alias("m"))
         )
-        large = (
+        large, moved_large = edge_set(
             nbr.join(mins, "u")
             .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .select(
+                F.col("v").alias("u"),
+                F.col("m").alias("v"),
+                (F.col("m") != F.col("u")).alias("moved"),
+            )
         )
         # --- small-star: edges already point large->small after
         # large-star; every smaller neighbor (and u) hooks onto u's
         # minimum neighbor.
         o_mins = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        small, moved_small = edge_set(
             large.join(o_mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(o_mins.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .select(
+                F.col("v").alias("u"), F.col("m").alias("v"),
+                F.lit(True).alias("moved"),
+            )
+            .union(
+                o_mins.select(
+                    "u", F.col("m").alias("v"), F.lit(False).alias("moved")
+                )
+            )
         )
-        n_new = small.count()
-        converged = n_new == n_edges and small.exceptAll(edges).isEmpty()
-        edges = small
-        n_edges = n_new
-        if converged:
-            break
+        return small, moved_large + moved_small
+
+    edges, pending = _materialize(
+        sym.filter(F.col("u") != F.col("v"))
+        .select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        )
+        .distinct(),
+        F.count(F.lit(1)),
+    )
+    edges = _fixpoint(
+        "connected_components", step, edges, pending, max_iter,
+        "edges rewired in the last round",
+    )
     # Fixpoint edges form stars (child -> component-min root): children
     # label from their root; roots and isolated vertices label themselves.
     labeled = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
@@ -228,82 +354,27 @@ def pagerank_fixed(
     ``checkpoint_interval`` rounds of joins between truncations — the
     plan-growth guard — while unchecked rounds fuse into the next
     checkpoint's single job; the recurrence itself is untouched, so
-    results are bit-identical at any interval (pytest-pinned).
-    Superseded checkpoint blocks are freed as soon as the next
-    checkpoint materializes.  Driver traffic is a single count (N);
-    ranks never leave the cluster.
-    """
-    from pyspark import StorageLevel
+    results are bit-identical at any interval (pytest-pinned).  The
+    vertex count N is observed by the vertex checkpoint's job; ranks
+    never leave the cluster.
 
-    if iterations < 1:
-        # with 0 rounds the returned frame would be derived straight
-        # from verts, whose checkpoint blocks are freed below — a later
-        # collect() would then find an unrecomputable (truncated-
-        # lineage) frame; and r_0 is just the constant scale div N
-        raise ValueError("pagerank_fixed: iterations must be >= 1")
-    if checkpoint_interval < 1:
-        raise ValueError("pagerank_fixed: checkpoint_interval must be >= 1")
+    The rounds are :func:`pagerank_weighted`'s, run over the distinct
+    edges with every weight 1: ``(r * 1) div outdeg`` is the share
+    above, so the results are bit-identical to a separate loop.
+    """
+    _check_pagerank_args("pagerank_fixed", iterations, checkpoint_interval)
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .distinct()
+        .withColumn("w", F.lit(1).cast("long"))
         .persist(StorageLevel.DISK_ONLY)
     )
-    verts = (
-        e.select(F.explode(F.array("u", "v")).alias("id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n = verts.count()
-    if n == 0:
+    try:
+        return _pagerank_rounds(
+            e, iterations, damping_pct, scale, checkpoint_interval
+        )
+    finally:
         e.unpersist()
-        return verts.select("id", F.lit(0).cast("long").alias("rank_fp"))
-    init = scale // n
-    base = ((100 - damping_pct) * init) // 100
-    outdeg = (
-        e.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("outdeg"))
-        .localCheckpoint(eager=True)
-    )
-    ranks = verts.select("id", F.lit(init).cast("long").alias("rank_fp"))
-    prev_ckpt = None
-    for i in range(iterations):
-        shares = (
-            ranks.join(outdeg, ranks["id"] == outdeg["u"])
-            .select("u", F.expr("rank_fp div outdeg").alias("share"))
-        )
-        msgs = (
-            e.join(shares, "u")
-            .select(F.col("v").alias("id"), "share")
-            .groupBy("id")
-            .agg(F.sum("share").alias("inbound"))
-        )
-        new_ranks = (
-            verts.join(msgs, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_pct} * coalesce(inbound, 0L)) div 100"
-                    )
-                ).cast("long").alias("rank_fp"),
-            )
-        )
-        if (i + 1) % checkpoint_interval == 0 or i == iterations - 1:
-            # eager checkpoint materializes this round (fusing any
-            # unchecked rounds since the last truncation into one job),
-            # so the PREVIOUS checkpoint's blocks (and, after the loop,
-            # the edge cache) can be dropped without risking
-            # recomputation of freed blocks
-            new_ranks = new_ranks.localCheckpoint(eager=True)
-            if prev_ckpt is not None:
-                prev_ckpt.unpersist()
-            prev_ckpt = new_ranks
-        ranks = new_ranks
-    e.unpersist()
-    outdeg.unpersist()
-    verts.unpersist()
-    return ranks
 
 
 def triangle_stats(
@@ -342,8 +413,6 @@ def triangle_stats(
     partitioning, and a SQL oracle can replay the identical ranking,
     orientation, and closure.
     """
-    from pyspark import StorageLevel
-
     und = (
         edges.select(
             F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b")
@@ -492,18 +561,20 @@ def k_core(
     the k-core is the stable product-community backbone.
 
     Scale shape: each round is ONE degree aggregate (map-side
-    combined) plus two semi-joins of the edge set against the
-    survivor set, all hash-partitioned on vertex id; the driver sees
-    ONE scalar per round (the survivor count).  ``localCheckpoint``
-    per round truncates lineage (plan stays O(1) across rounds).
+    combined) over the input edges semi-joined twice against the
+    survivor set, all hash-partitioned on vertex id, and one
+    checkpoint job that also observes how many vertices are still
+    below ``k``.  Peeling only ever removes vertices, so a round's
+    edges are the input edges restricted to the last round's
+    survivors and only the vertex-sized degrees are checkpointed.
     Rounds needed = peel depth of the graph — bounded by the
     degeneracy ordering, small on dense community graphs; adversarial
     chain graphs peel one layer per round, which is why ``max_iter``
     exists — and why exhausting it RAISES rather than returning the
     mid-peel state (which would be a silent superset of the true
-    k-core).  The peel is IDEMPOTENT once converged, so running more
-    rounds than needed never changes the answer — the property the
-    fixed-unroll DuckDB oracle relies on.
+    k-core; module docstring).  The peel is IDEMPOTENT once converged,
+    so running more rounds than needed never changes the answer — the
+    property the fixed-unroll DuckDB oracle relies on.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -513,52 +584,25 @@ def k_core(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("core_degree"))
-    n_prev = deg.count()
-    converged = False
-    for _ in range(max_iter):
+
+    def degrees(edges: DataFrame) -> tuple[DataFrame, int]:
+        return _materialize(
+            edges.groupBy("u").agg(F.count(F.lit(1)).alias("core_degree")),
+            F.count_if(F.col("core_degree") < k),
+        )
+
+    def peel(deg: DataFrame) -> tuple[DataFrame, int]:
         keep = deg.filter(F.col("core_degree") >= k).select("u")
-        n_keep = keep.count()
-        if n_keep == n_prev:
-            converged = True
-            break
-        sym = (
-            sym.join(keep, "u", "semi")
-            .join(
+        return degrees(
+            sym.join(keep, "u", "semi").join(
                 keep.select(F.col("u").alias("v")), "v", "semi"
             )
-            .localCheckpoint(eager=True)
         )
-        deg = sym.groupBy("u").agg(
-            F.count(F.lit(1)).alias("core_degree")
-        )
-        n_prev = n_keep
-    if not converged:
-        # ADVICE r7: one confirming comparison before raising — a peel
-        # that reaches its fixed point EXACTLY on the final allowed
-        # round leaves the loop without observing the stability (the
-        # check happens at the top of the next round), and max_iter=0
-        # on an input that is already a k-core is the same situation.
-        # The recount is one scalar job; idempotence of the converged
-        # peel makes it sound.
-        converged = (
-            deg.filter(F.col("core_degree") >= k).count() == n_prev
-        )
-    if not converged:
-        # ADVICE r6: returning mid-peel state would silently be a
-        # SUPERSET of the true k-core (degrees from a not-fully-peeled
-        # graph), contradicting the documented maximal-subgraph
-        # semantics — adversarial chain graphs peel one layer per
-        # round and can exhaust any fixed budget.
-        raise RuntimeError(
-            f"k_core: peel did not reach a fixed point within "
-            f"max_iter={max_iter} rounds ({n_prev} vertices still "
-            f"shrinking); raise max_iter — the result at this point "
-            f"would be an unconverged superset of the true {k}-core"
-        )
-    return deg.filter(F.col("core_degree") >= k).select(
-        F.col("u").alias("id"), "core_degree"
+
+    deg = _fixpoint(
+        "k_core", peel, *degrees(sym), max_iter, f"vertices below degree {k}"
     )
+    return deg.select(F.col("u").alias("id"), "core_degree")
 
 
 def label_propagation(
@@ -663,19 +707,17 @@ def bfs_hops(
     visited set to drop re-discovered vertices BEFORE they re-expand —
     that dedup is what keeps per-round work O(frontier boundary), not
     O(paths), which grows combinatorially without it.  The visited set
-    is vertex-sized, never edge-sized.  Each round's FRONTIER is
-    ``localCheckpoint(eager=True)``-ed (truncating lineage so the plan
-    stays O(1) across rounds, and letting the early-exit count probe
-    reuse the materialized frontier instead of recomputing the whole
-    prefix); the VISITED set is kept as a lazy union of those
-    checkpointed frontiers rather than eagerly re-copied per round
-    (r10 verdict item 6: the per-round visited checkpoint was a
-    separate job that re-materialized the whole O(visited) set every
-    round for no reader that needs it — the anti-join and the final
-    result read the union of already-materialized blocks; plan growth
-    is one union node per hop, bounded by ``max_hops``).  The driver
-    sees one count per round — control flow only, never data — and
-    the final round skips it (nothing consumes it).
+    is vertex-sized, never edge-sized.  Each round's FRONTIER is one
+    checkpoint job that also observes its size (module docstring),
+    which picks the next round's join strategy (:func:`_edge_join`)
+    and stops the loop on an empty frontier; the VISITED set is kept
+    as a lazy union of those checkpointed frontiers rather than
+    eagerly re-copied per round (r10 verdict item 6: the per-round
+    visited checkpoint was a separate job that re-materialized the
+    whole O(visited) set every round for no reader that needs it —
+    the anti-join and the final result read the union of
+    already-materialized blocks; plan growth is one union node per
+    hop, bounded by ``max_hops``).
 
     ``assume_symmetric=True`` skips the symmetrizing union when the
     caller's edge list already contains both directions (e.g. an
@@ -705,79 +747,32 @@ def bfs_hops(
         # would otherwise re-run every round, so it checkpoints even
         # on the materialized path
         sym = sym.localCheckpoint(eager=True)
-    frontier = (
-        seeds.select(F.col(seeds.columns[0]).alias("id"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    frontier, n_frontier = _materialize(
+        seeds.select(F.col(seeds.columns[0]).alias("id")).distinct(),
+        F.count(F.lit(1)),
     )
-    visited = frontier.withColumn("hops", F.lit(0))
-    n_frontier = frontier.count()
-    n_visited = n_frontier
-    # lazily built u-partitioned copy of the edges for past-the-limit
-    # rounds: a shuffled hash join re-shuffles BOTH inputs per round,
-    # and the edge side is the big one — pre-partitioning it ONCE on
-    # the join key (persisted DISK_ONLY: InMemoryRelation preserves
-    # outputPartitioning, so EnsureRequirements adds no new Exchange;
-    # deserialized heap caching of an edge list is the known OOM) makes
-    # every subsequent big-frontier round shuffle O(frontier) only.
-    # Built on demand because small-frontier BFS never pays for it.
-    from pyspark import StorageLevel
-
-    sym_shj = None
-    for h in range(1, max_hops + 1):
-        if n_frontier == 0:
-            break
-        # Join strategy per round, chosen from the EXACT frontier /
-        # visited counts the loop already tracks (the per-round count
-        # doubles as the empty-frontier exit probe, so it's free):
-        # frontier and visited are usually tiny relative to the edge
-        # list, and broadcasting them makes the round a map-side pass
-        # over the ONE-TIME-shuffled, checkpointed edges — zero
-        # exchanges per round (measured 7.5s -> sub-second per round
-        # on the sf0.1 co-purchase graph).  Past the threshold, fall
-        # back to shuffle_hash on the vertex key — never a planner
-        # guess: localCheckpoint'ed frames carry no reliable size
-        # stats, and letting the planner pick broadcast chose the
-        # EDGE side (observed driver OOM at sf0.1).
-        if n_frontier <= broadcast_limit:
-            expanded = sym.join(
-                F.broadcast(frontier), sym["u"] == frontier["id"]
+    visited, n_visited = frontier.withColumn("hops", F.lit(0)), n_frontier
+    with _edge_join(sym, broadcast_limit) as expand:
+        for h in range(1, max_hops + 1):
+            if n_frontier == 0:
+                break
+            cand = (
+                expand(frontier, n_frontier)
+                .select(F.col("v").alias("id"))
+                .distinct()
             )
-        else:
-            # the hint marks the BUILD side — it must be the
-            # vertex-sized frontier, never the edges: per task the
-            # build is |frontier|/partitions rows, while an edge-side
-            # build is |E|/partitions and AQE's partition coalescing
-            # concentrates it further (measured at sf10: 8 coalesced
-            # partitions x ~10M edges -> >1 GB LongToUnsafeRowMap per
-            # task, "Can't acquire memory to build hash relation")
-            if sym_shj is None:
-                sym_shj = sym.repartition(F.col("u")).persist(
-                    StorageLevel.DISK_ONLY
-                )
-            expanded = frontier.hint("shuffle_hash").join(
-                sym_shj, frontier["id"] == sym_shj["u"]
+            # the visited side of the anti-join follows the same
+            # broadcast-or-build-the-vertex-side rule
+            seen = visited.select("id")
+            if n_visited <= broadcast_limit:
+                nxt = cand.join(F.broadcast(seen), "id", "left_anti")
+            else:
+                nxt = cand.join(seen.hint("shuffle_hash"), "id", "left_anti")
+            frontier, n_frontier = _materialize(nxt, F.count(F.lit(1)))
+            visited = visited.unionByName(
+                frontier.withColumn("hops", F.lit(h))
             )
-        cand = expanded.select(F.col("v").alias("id")).distinct()
-        seen = visited.select("id")
-        if n_visited <= broadcast_limit:
-            nxt = cand.join(F.broadcast(seen), "id", "left_anti")
-        else:
-            nxt = cand.join(seen.hint("shuffle_hash"), "id", "left_anti")
-        nxt = nxt.localCheckpoint(eager=True)
-        if h == max_hops:
-            # last round: no further strategy decision or exit probe
-            # consumes the count — skip the job
-            visited = visited.unionByName(nxt.withColumn("hops", F.lit(h)))
-            break
-        n_frontier = nxt.count()
-        if n_frontier == 0:
-            break
-        n_visited += n_frontier
-        visited = visited.unionByName(nxt.withColumn("hops", F.lit(h)))
-        frontier = nxt
-    if sym_shj is not None:
-        sym_shj.unpersist()
+            n_visited += n_frontier
     return visited
 
 
@@ -805,13 +800,12 @@ def min_cost_bounded(
 
     Scale shape: the distance table is VERTEX-sized, never edge-sized.
     Per round: one dist⋈edges join on the vertex key (the same
-    adaptive broadcast-vs-shuffle_hash choice as :func:`bfs_hops`,
-    driven by the exact dist count the loop tracks — planner size
-    guesses on checkpointed frames are not trusted), one
-    map-side-combinable ``min`` aggregate, ``localCheckpoint`` per
-    round for O(1) plans.  Relaxation is monotone, so rounds past the
-    fixpoint are no-ops (pinned in pytest), but the loop runs the
-    declared count — determinism over adaptivity.
+    :func:`_edge_join` as :func:`bfs_hops`, driven by the dist count
+    each round's checkpoint observes), one map-side-combinable ``min``
+    aggregate, one checkpoint job per round for O(1) plans.
+    Relaxation is monotone, so rounds past the fixpoint are no-ops
+    (pinned in pytest), but the loop runs the declared count —
+    determinism over adaptivity (module docstring).
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
@@ -822,46 +816,24 @@ def min_cost_bounded(
     )
     if not materialized:
         e = e.localCheckpoint(eager=True)
-    dist = (
+    dist, n_dist = _materialize(
         seeds.select(F.col(seeds.columns[0]).alias("id"))
         .distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
+        .withColumn("cost", F.lit(0).cast("long")),
+        F.count(F.lit(1)),
     )
-    n_dist = dist.count()
-    from pyspark import StorageLevel
-
-    e_shj = None  # lazy u-partitioned edge copy, see bfs_hops
-    for rnd in range(rounds):
-        if n_dist <= broadcast_limit:
-            relaxed = e.join(F.broadcast(dist), e["u"] == dist["id"])
-        else:
-            # build side = vertex-sized dist, never the edges (see
-            # bfs_hops: an edge-side build OOMs per task at scale);
-            # edges pre-partitioned on u once so later rounds shuffle
-            # O(vertices), not O(edges)
-            if e_shj is None:
-                e_shj = e.repartition(F.col("u")).persist(
-                    StorageLevel.DISK_ONLY
-                )
-            relaxed = dist.hint("shuffle_hash").join(
-                e_shj, dist["id"] == e_shj["u"]
+    with _edge_join(e, broadcast_limit) as expand:
+        for _ in range(rounds):
+            relaxed = expand(dist, n_dist).select(
+                F.col("v").alias("id"),
+                (F.col("cost") + F.col("w")).alias("cost"),
             )
-        relaxed = relaxed.select(
-            F.col("v").alias("id"), (F.col("cost") + F.col("w")).alias("cost")
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("cost").alias("cost"))
-            .localCheckpoint(eager=True)
-        )
-        if rnd < rounds - 1:
-            # the count only feeds the NEXT round's join-strategy
-            # choice; the final round has no consumer for it
-            n_dist = dist.count()
-    if e_shj is not None:
-        e_shj.unpersist()
+            dist, n_dist = _materialize(
+                dist.unionByName(relaxed)
+                .groupBy("id")
+                .agg(F.min("cost").alias("cost")),
+                F.count(F.lit(1)),
+            )
     return dist
 
 
@@ -935,17 +907,12 @@ def pagerank_weighted(
     Same scale shape as pagerank_fixed (edges persisted once or, with
     ``materialized=True``, read straight off a
     :func:`write_graph_index` table; O(vertices) shuffles per round;
-    one scalar count to the driver; ``checkpoint_interval`` bounds
-    plan depth while skipping the per-round eager-checkpoint job —
-    see pagerank_fixed) and the same determinism argument: integer
+    one observed vertex count to the driver; ``checkpoint_interval``
+    bounds plan depth while skipping the per-round eager-checkpoint
+    job — see pagerank_fixed) and the same determinism argument: integer
     ops are associative, so the oracle unrolls the identical rounds.
     """
-    from pyspark import StorageLevel
-
-    if iterations < 1:
-        raise ValueError("pagerank_weighted: iterations must be >= 1")
-    if checkpoint_interval < 1:
-        raise ValueError("pagerank_weighted: checkpoint_interval must be >= 1")
+    _check_pagerank_args("pagerank_weighted", iterations, checkpoint_interval)
     e = edges.select(
         F.col(src).alias("u"),
         F.col(dst).alias("v"),
@@ -964,19 +931,37 @@ def pagerank_weighted(
                 f"pagerank_weighted: scale*max(w) = {scale * guard['mx']} "
                 "overflows int64; lower scale or rescale weights"
             )
-    except BaseException:
+        return _pagerank_rounds(
+            e, iterations, damping_pct, scale, checkpoint_interval
+        )
+    finally:
         if not materialized:
             e.unpersist()
-        raise
-    verts = (
-        e.select(F.explode(F.array("u", "v")).alias("id"))
-        .distinct()
-        .localCheckpoint(eager=True)
+
+
+def _check_pagerank_args(op: str, iterations: int, checkpoint_interval: int):
+    # checked before anything is persisted or checkpointed
+    if iterations < 1:
+        raise ValueError(f"{op}: iterations must be >= 1")
+    if checkpoint_interval < 1:
+        raise ValueError(f"{op}: checkpoint_interval must be >= 1")
+
+
+def _pagerank_rounds(
+    e: DataFrame,
+    iterations: int,
+    damping_pct: int,
+    scale: int,
+    checkpoint_interval: int,
+) -> DataFrame:
+    """The :func:`pagerank_weighted` recurrence over edges ``(u, v, w)``.
+    The returned ranks are a checkpoint, so the caller may release
+    ``e`` as soon as this returns."""
+    verts, n = _materialize(
+        e.select(F.explode(F.array("u", "v")).alias("id")).distinct(),
+        F.count(F.lit(1)),
     )
-    n = verts.count()
     if n == 0:
-        if not materialized:
-            e.unpersist()
         return verts.select("id", F.lit(0).cast("long").alias("rank_fp"))
     init = scale // n
     base = ((100 - damping_pct) * init) // 100
@@ -999,7 +984,7 @@ def pagerank_weighted(
             .groupBy("id")
             .agg(F.sum("share").alias("inbound"))
         )
-        new_ranks = (
+        ranks = (
             verts.join(msgs, "id", "left")
             .select(
                 "id",
@@ -1012,13 +997,5 @@ def pagerank_weighted(
             )
         )
         if (i + 1) % checkpoint_interval == 0 or i == iterations - 1:
-            new_ranks = new_ranks.localCheckpoint(eager=True)
-        ranks = new_ranks
-    # only e holds persist() blocks; the localCheckpoint'ed frames
-    # (verts/wsum/ranks) are eagerly-materialized block scans with no
-    # persist cache to release — unpersist() on them is a no-op (and, if
-    # it ever did drop checkpoint blocks, would break frames still
-    # derived from them), so none is attempted (ADVICE r8).
-    if not materialized:
-        e.unpersist()
+            ranks = ranks.localCheckpoint(eager=True)
     return ranks

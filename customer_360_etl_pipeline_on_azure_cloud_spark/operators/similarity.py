@@ -3004,15 +3004,12 @@ def kcenter_select(
         cvec = F.array(*[F.lit(float(x)) for x in r["vec"]])
         cnorm = float(r["nrm"])
         new_cos = dot(F.col("vec"), cvec) / (F.col("nrm") * F.lit(cnorm))
-        prev = state
         state = state.select(
             "id",
             "vec",
             "nrm",
             F.greatest(F.col("best_cos"), new_cos).alias("best_cos"),
         ).localCheckpoint(eager=True)
-        prev.unpersist()
-    state.unpersist()
     spark = corpus.sparkSession
     return spark.createDataFrame(
         picks, schema="pick_round bigint, vec_id bigint, maxcos_e9 bigint"

@@ -15,11 +15,17 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
+    # managed tables go to a session temp dir, not the working directory
+    warehouse = tmp_path_factory.mktemp("spark-warehouse")
     spark = get_spark(
         app_name="c360-tests",
         master="local[4]",
         shuffle_partitions=4,
-        extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "4g"},
+        extra_conf={
+            "spark.ui.enabled": "false",
+            "spark.driver.memory": "4g",
+            "spark.sql.warehouse.dir": str(warehouse),
+        },
     )
     yield spark

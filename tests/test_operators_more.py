@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_SMALL
@@ -306,7 +307,15 @@ def test_connected_components_transitive_and_singletons(spark):
     assert keep == [1, 10, 99]
 
 
-def test_connected_components_long_chain_converges(spark):
+@pytest.mark.parametrize(
+    "algorithm,budget", [("hash_min", 13), ("two_phase", 5)]
+)
+def test_connected_components_long_chain_converges(spark, algorithm, budget):
+    """``budget`` is the exact round count the path needs, counting the
+    round that proves the fixed point (hash-min: 12 label hops plus the
+    unchanged round; two_phase: 4 rewiring rounds plus the unchanged
+    one).  Converging on the last allowed round returns; one round less
+    leaves labels unproven, and that raises instead of returning them."""
     from customer_360_etl_pipeline_on_azure_cloud_spark.operators.graph import (
         connected_components,
     )
@@ -315,9 +324,13 @@ def test_connected_components_long_chain_converges(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], ["id_a", "id_b"]
     )
-    rows = connected_components(edges).collect()
+    rows = connected_components(
+        edges, algorithm=algorithm, max_iter=budget
+    ).collect()
     assert {r["component"] for r in rows} == {0}
     assert len(rows) == 13
+    with pytest.raises(RuntimeError, match="fixed point"):
+        connected_components(edges, algorithm=algorithm, max_iter=budget - 1)
 
 
 def test_two_phase_components_fixpoint_equals_hash_min(spark):

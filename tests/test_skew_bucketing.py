@@ -5,6 +5,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from customer_360_etl_pipeline_on_azure_cloud_spark.operators.index import (
+    reset_tables,
+)
 from customer_360_etl_pipeline_on_azure_cloud_spark.operators.skew import (
     bucketed_join,
     salted_join,
@@ -50,11 +53,7 @@ def test_salted_join_spreads_hot_key(spark):
 
 
 def test_bucketed_join_has_no_shuffle(spark):
-    import shutil
-
-    for t in ("t_bleft", "t_bright"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
+    reset_tables(spark, "t_bleft", "t_bright")
     left = spark.range(0, 10000).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("x")
     )
