@@ -24,4 +24,15 @@ Design principles (100 TB-minded):
   tie-broken variants.
 """
 
+import sys
+
+from pyspark import cloudpickle as _cloudpickle
+
 __version__ = "0.1.0"
+
+# Python workers do not inherit the driver's sys.path: a UDF closure that
+# references a package function pickles it by import path, and a driver
+# that imports the package through sys.path alone then fails in the
+# worker with ModuleNotFoundError.  Pickling the package by value ships
+# the referenced functions with the closure instead.
+_cloudpickle.register_pickle_by_value(sys.modules[__name__])

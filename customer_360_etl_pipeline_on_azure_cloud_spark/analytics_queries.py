@@ -1553,8 +1553,9 @@ per_day AS (
   SELECT first_day, COUNT(*) AS new_users FROM first_seen GROUP BY first_day
 )
 SELECT first_day AS day, new_users,
-       SUM(new_users) OVER (ORDER BY first_day
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_users
+       CAST(SUM(new_users) OVER (ORDER BY first_day
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+         AS cum_users
 FROM per_day
 """
 
@@ -2840,8 +2841,8 @@ def q_nation_trade_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_NATION_TRADE_MATRIX = """
 SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
-       SUM(CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 100, 0)
-                AS BIGINT)) AS revenue_cents,
+       CAST(SUM(CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 100, 0)
+                     AS BIGINT)) AS BIGINT) AS revenue_cents,
        COUNT(*) AS n_lineitems
 FROM lineitem l
 JOIN orders o ON o.o_orderkey = l.l_orderkey

@@ -750,7 +750,7 @@ kept AS (
 ),
 tot AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs_total,
-         SUM(ntok) AS tokens_total
+         CAST(SUM(ntok) AS BIGINT) AS tokens_total
   FROM docs GROUP BY source
 )
 SELECT t.source, t.n_docs_total, t.tokens_total,

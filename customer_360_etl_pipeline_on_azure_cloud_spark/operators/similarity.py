@@ -14,6 +14,39 @@ Two paths, per the standard ANN playbook:
 The dot product is a sequential fold over array<double> (zip_with +
 aggregate) — built-in expressions, JVM-side, and the same reduction order
 as DuckDB's list_dot_product so oracle comparisons are exact.
+
+Vector quantizers.  IVF (coarse centroids), PQ (per-subspace codebooks)
+and IVFPQ (both, PQ on the residuals v - centroid) share one core:
+
+* One fit entry point.  :func:`_fit_quantizer` is the only code that
+  reads a ``centroid_fit``/``codebook_fit`` mode or takes the driver
+  sample.  ``"sample"`` runs seeded driver-side Lloyd
+  (:func:`_kmeans_lite`, 10 rounds) on the first ``sample_size`` rows
+  by id — ``orderBy(id).limit(sample_size)``, a TakeOrdered, so the same
+  rows under any partitioning; k is capped at the sample size, and an
+  automatically sized k (semantic_dedup) at ``max(16, sample_size //
+  2)``, with a warning.  ``"distributed"`` fits on the whole corpus
+  (:func:`kmeans_distributed`, :func:`pq_codebooks_distributed`): k is
+  bounded only by the k x d matrix the driver holds, and the k-means||
+  seeding reduction costs O(k^2 d) driver flops.  ``"hierarchical"``
+  (coarse centroids only) fits ceil(sqrt(k)) cells distributed, then
+  refits each cell executor-side (:func:`kmeans_hierarchical`), with no
+  driver-side seeding reduction.  PQ and IVFPQ fit L2-normalized
+  vectors, on which L2 ranks like cosine; a zero vector stays zero.
+* Fixed-point determinism.  Distributed fits assign and sum on int64
+  coordinates ``round(x * scale)`` (scale 2^20): distances are exact
+  (:func:`_exact_int_sq_dists`, ties to the lowest index), sums merge as
+  decimal(38,0), and seeds and samples are md5- or id-ordered, so every
+  fit is bit-identical under any partitioning or AQE split.
+* One distributed Lloyd round.  :func:`_lloyd_round` updates books of
+  shape ``(m, k, d/m)``: one Arrow pass assigns every row in all m
+  subspaces and reduces each batch to at most ``m * k`` partial sums,
+  then one exact merge.  k-means is the ``m = 1`` case; an empty cell
+  keeps its centroid.
+* PQ is IVFPQ with one coarse cell [Jégou et al. 2011].  :func:`pq_topk`
+  encodes and probes through :func:`_ivfpq_encode` and
+  :func:`_ivfpq_probe` (the one ADC scan and exact refine) with the
+  single zero centroid, so each residual is the unit vector itself.
 """
 
 from __future__ import annotations
@@ -147,7 +180,7 @@ def srp_buckets_vectorized(
                 pdf[out_col] = []
                 yield pdf
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            V = _mat(pdf[vec_col])
             signs = (V @ H.T) >= 0  # (n, L*b)
             signs = signs.reshape(len(V), L, nbits)
             buckets = (signs * weights).sum(axis=2).astype(np.int64)  # (n, L)
@@ -210,7 +243,7 @@ def srp_buckets_multiprobe(
                 pdf[out_col] = []
                 yield pdf
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            V = _mat(pdf[vec_col])
             proj = (V @ H.T).reshape(len(V), L, nbits)
             base = ((proj >= 0) * weights).sum(axis=2).astype(np.int64)  # (n, L)
             # flip order: |margin| ascending, stable -> lowest bit wins ties
@@ -317,30 +350,67 @@ def cosine_topk_lsh(
     )
 
 
-def _kmeans_lite(sample: np.ndarray, k: int, iters: int = 10, seed: int = 11) -> np.ndarray:
-    """Deterministic Lloyd's k-means on a driver-side sample — the coarse
-    quantizer for IVF. A sample of a few thousand vectors is enough to
-    place centroids; the full corpus never leaves the cluster.
+def _mat(values, dtype=np.float64) -> np.ndarray:
+    """Rows of an array column (an Arrow batch's series or collected
+    values) as one dense matrix."""
+    return np.array([np.asarray(v, dtype=dtype) for v in values])
 
-    Distances use the n x k matmul form, never the n x k x d broadcast
-    cube (at the max sample/cap sizes the cube transiently allocated
-    ~1 GB on the driver)."""
-    k = min(k, len(sample))  # degenerate corpora: never ask for more
-    rng = np.random.RandomState(seed)  # centroids than sample rows
-    centroids = sample[rng.choice(len(sample), size=k, replace=False)]
-    s_sq = (sample**2).sum(axis=1)
+
+def _unit(V: np.ndarray) -> np.ndarray:
+    """Row-wise L2 normalization; a zero row stays zero."""
+    n = np.linalg.norm(V, axis=1)
+    return V / np.where(n == 0, 1.0, n)[:, None]
+
+
+def _l2_rank(V: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """``||v - c||^2 - ||v||^2`` for every (row, centroid) pair: the
+    n x k matmul form, which ranks centroids per row like the squared
+    distance (never the n x k x d broadcast cube)."""
+    return -2.0 * (V @ C.T) + (C**2).sum(axis=1)[None, :]
+
+
+def _resid(V: np.ndarray, cents: np.ndarray | None) -> tuple:
+    """L2-normalize the rows of ``V`` and subtract each row's nearest
+    coarse centroid: ``(cell, residual)``.  ``cents=None`` is the one
+    zero centroid of plain PQ: cell 0, residual = the unit vector."""
+    V = _unit(V)
+    C = np.zeros((1, V.shape[1])) if cents is None else cents
+    cell = _l2_rank(V, C).argmin(axis=1)
+    return cell, V - C[cell]
+
+
+def _lloyd_driver(
+    X: np.ndarray, centroids: np.ndarray, w: np.ndarray, iters: int
+) -> np.ndarray:
+    """Driver-side weighted Lloyd rounds over the rows of ``X``, in
+    place on ``centroids``: n x k matmul distances (never the n x k x d
+    broadcast cube, which reaches GBs at k-means|| candidate sizes),
+    then weighted means; a cell without weight keeps its centroid.
+    Unit weights give exactly ``mean`` (the same sum over the same
+    rows, divided by the same count)."""
+    x_sq = (X**2).sum(axis=1)
     for _ in range(iters):
         d = (
-            s_sq[:, None]
-            - 2.0 * (sample @ centroids.T)
+            x_sq[:, None]
+            - 2.0 * (X @ centroids.T)
             + (centroids**2).sum(axis=1)[None, :]
         )
         assign = d.argmin(axis=1)
-        for c in range(k):
-            members = sample[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
+        for c in range(len(centroids)):
+            sel = assign == c
+            if w[sel].sum() > 0:
+                centroids[c] = (X[sel] * w[sel, None]).sum(axis=0) / w[sel].sum()
     return centroids
+
+
+def _kmeans_lite(sample: np.ndarray, k: int, iters: int = 10, seed: int = 11) -> np.ndarray:
+    """Deterministic Lloyd's k-means on a driver-side sample, the
+    ``"sample"`` fit (see the module docstring): a seeded choice of
+    ``min(k, rows)`` distinct rows, then :func:`_lloyd_driver`."""
+    k = min(k, len(sample))
+    rng = np.random.RandomState(seed)
+    init = sample[rng.choice(len(sample), size=k, replace=False)]
+    return _lloyd_driver(sample, init, np.ones(len(sample)), iters)
 
 
 def _assign_centroids(
@@ -352,11 +422,9 @@ def _assign_centroids(
 ) -> DataFrame:
     """Attach each row's ``nprobe`` nearest centroid ids (one Arrow
     matmul pass, same shape as srp_buckets_vectorized)."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     C = centroids.astype(np.float64)
-    c_sq = (C**2).sum(axis=1)
     schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
     )
@@ -367,12 +435,9 @@ def _assign_centroids(
                 pdf[out_col] = []
                 yield pdf
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            # squared L2 to each centroid: |v|^2 - 2 v.c + |c|^2 (|v|^2 constant per row)
-            d = -2.0 * (V @ C.T) + c_sq[None, :]
-            cells = np.argsort(d, axis=1)[:, :nprobe].astype(np.int32)
+            cells = np.argsort(_l2_rank(_mat(pdf[vec_col]), C), axis=1)
             pdf = pdf.copy()
-            pdf[out_col] = list(cells)
+            pdf[out_col] = list(cells[:, :nprobe].astype(np.int32))
             yield pdf
 
     return df.mapInPandas(run, schema)
@@ -433,103 +498,95 @@ def _exact_int_sq_dists(Q: np.ndarray, Cq: np.ndarray) -> np.ndarray:
     )
 
 
-def _lloyd_stats(
-    e: DataFrame, centroids: np.ndarray, qvec_col: str, scale: int
-) -> list:
-    """One distributed Lloyd round's sufficient statistics: per-cell
-    (count, per-dimension fixed-point coordinate sum).
+def _lloyd_round(
+    data: DataFrame, books: np.ndarray, scale: int, quantize: bool
+) -> np.ndarray:
+    """The one distributed Lloyd round (see the module docstring) over
+    the single vector column of ``data``, for ``books`` of shape
+    ``(m, k, d/m)``; returns the new books.
 
-    Shape: ONE Arrow pass assigns each batch to cells AND reduces the
-    batch to at most k partial rows (cell, n, int64 coordinate sums) —
-    the map-side combine; the cross-batch merge is a tiny decimal(38,0)
-    aggregate (exact, order-independent — integer sums make the round
-    deterministic under any partitioning, the property float sums
-    can't give). Assignment also runs on the QUANTIZED coordinates
-    (exact distances via _exact_int_sq_dists), so cell membership
-    itself is split-invariant. Driver traffic: k*d numbers per round.
-    """
+    One Arrow pass assigns every row in all m subspaces on fixed-point
+    coordinates (exact distances) and reduces each batch to at most
+    ``m * k`` partial rows (cell count, int64 coordinate sums): the
+    map-side combine.  The cross-batch merge sums them as decimal(38,0),
+    exact and order-free, and ships ``m * k * d/m`` numbers to the
+    driver.  With ``quantize`` the column holds floats, rounded in-batch
+    with ``np.rint``; otherwise it already holds int64 fixed-point
+    coordinates."""
     import pandas as pd
-    from pyspark.sql import types as T
 
-    Cq = np.rint(centroids.astype(np.float64) * float(scale)).astype(np.int64)
-    out_schema = T.StructType(
-        [
-            T.StructField("cell", T.IntegerType()),
-            T.StructField("n", T.LongType()),
-            T.StructField("qsum", T.ArrayType(T.LongType())),
-        ]
-    )
+    m, k, dsub = books.shape
+    fscale = float(scale)
+    Cq = np.rint(books * fscale).astype(np.int64)
+    col = data.columns[0]
 
-    def run(batches):
+    def stats(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Q = np.array([np.asarray(v, dtype=np.int64) for v in pdf[qvec_col]])
-            cells = _exact_int_sq_dists(Q, Cq).argmin(axis=1)
-            present = np.unique(cells)
-            acc = np.zeros((len(Cq), Q.shape[1]), dtype=np.int64)
-            np.add.at(acc, cells, Q)
-            cnt = np.bincount(cells, minlength=len(Cq))
+            if quantize:
+                Q = np.rint(_mat(pdf[col]) * fscale).astype(np.int64)
+            else:
+                Q = _mat(pdf[col], np.int64)
+            out_j, out_c, out_n, out_s = [], [], [], []
+            for j in range(m):
+                Qj = np.ascontiguousarray(Q[:, j * dsub : (j + 1) * dsub])
+                cells = _exact_int_sq_dists(Qj, Cq[j]).argmin(axis=1)
+                present = np.unique(cells)
+                acc = np.zeros((k, dsub), dtype=np.int64)
+                np.add.at(acc, cells, Qj)
+                cnt = np.bincount(cells, minlength=k)
+                out_j.append(np.full(len(present), j, dtype=np.int32))
+                out_c.append(present.astype(np.int32))
+                out_n.append(cnt[present].astype(np.int64))
+                out_s.extend(acc[c] for c in present)
             yield pd.DataFrame(
                 {
-                    "cell": present.astype(np.int32),
-                    "n": cnt[present].astype(np.int64),
-                    "qsum": [acc[c] for c in present],
+                    "j": np.concatenate(out_j),
+                    "cell": np.concatenate(out_c),
+                    "n": np.concatenate(out_n),
+                    "qsum": out_s,
                 }
             )
 
-    partial = e.mapInPandas(run, out_schema)
     merged = (
-        partial.select(
-            "cell", "n", F.posexplode("qsum").alias("pos", "qs")
-        )
-        .groupBy("cell", "pos")
+        data.mapInPandas(stats, "j int, cell int, n long, qsum array<long>")
+        .select("j", "cell", "n", F.posexplode("qsum").alias("pos", "qs"))
+        .groupBy("j", "cell", "pos")
         .agg(
             F.sum(F.col("qs").cast("decimal(38,0)")).alias("qsum"),
             F.sum(
                 F.when(F.col("pos") == 0, F.col("n")).otherwise(F.lit(0))
             ).alias("n0"),
         )
+        .collect()
     )
-    return merged.collect()
+    counts = {(r["j"], r["cell"]): int(r["n0"]) for r in merged if r["pos"] == 0}
+    new = books.copy()
+    for r in merged:
+        n = counts.get((r["j"], r["cell"]), 0)
+        if n > 0:
+            new[r["j"], r["cell"], r["pos"]] = float(int(r["qsum"])) / (fscale * n)
+    return new
 
 
 def _weighted_kmeans_lite(
-    cand: np.ndarray, w: np.ndarray, k: int, iters: int = 10, seed: int = 11
+    cand: np.ndarray, w: np.ndarray, k: int, iters: int = 10
 ) -> np.ndarray:
     """Weighted Lloyd on the (small) k-means|| candidate set — the
-    driver-side reduction step of Bahmani et al. 2012. Deterministic:
-    seeded greedy D^2 init over weighted candidates, then weighted
-    means."""
+    driver-side reduction step of Bahmani et al. 2012.  Deterministic
+    greedy weighted k-means++ init: the heaviest candidate (ties: lowest
+    index), then repeatedly the candidate with the largest weighted
+    squared distance to the chosen set; then :func:`_lloyd_driver`."""
     k = min(k, len(cand))
-    # greedy weighted k-means++ init: start from the heaviest candidate
-    # (ties: lowest index), then repeatedly take the candidate with max
-    # weighted squared distance to the chosen set — deterministic, no rng
     order = np.lexsort((np.arange(len(cand)), -w))
     chosen = [order[0]]
     d2 = ((cand - cand[chosen[0]]) ** 2).sum(axis=1)
     while len(chosen) < k:
-        score = w * d2
-        nxt = int(score.argmax())
+        nxt = int((w * d2).argmax())
         chosen.append(nxt)
         d2 = np.minimum(d2, ((cand - cand[nxt]) ** 2).sum(axis=1))
-    centroids = cand[chosen].copy()
-    c_sq_cand = (cand**2).sum(axis=1)
-    for _ in range(iters):
-        # matmul distance form: an n x k matrix, never the n x k x d
-        # broadcast cube (k-means|| candidate sets reach tens of
-        # thousands of rows at large k — the cube would be tens of GB)
-        d = (
-            c_sq_cand[:, None]
-            - 2.0 * (cand @ centroids.T)
-            + (centroids**2).sum(axis=1)[None, :]
-        )
-        assign = d.argmin(axis=1)
-        for c in range(k):
-            m = assign == c
-            if w[m].sum() > 0:
-                centroids[c] = (cand[m] * w[m, None]).sum(axis=0) / w[m].sum()
-    return centroids
+    return _lloyd_driver(cand, cand[chosen], w, iters)
 
 
 def kmeans_distributed(
@@ -560,8 +617,9 @@ def kmeans_distributed(
     the result is identical under any partitioning/AQE split, which
     float accumulation cannot promise.
 
-    Per round: one Arrow assign+partial-reduce pass over the corpus, a
-    k*d-row decimal aggregate, k*d numbers to the driver. Seeding: one
+    Per round: one :func:`_lloyd_round` with books of shape
+    ``(1, k, d)`` (one Arrow assign+partial-reduce pass over the corpus,
+    a k*d-row decimal aggregate, k*d numbers to the driver). Seeding: one
     cost pass + one sample pass per seed round (expected `oversample`
     candidates each), one weighting pass, then a driver-side weighted
     reduction of the ~seed_rounds*oversample candidates.
@@ -615,22 +673,12 @@ def kmeans_distributed(
         # Lloyd reads only the quantized coordinates — select them
         # explicitly so the Arrow boundary ships one column, not the
         # whole (id, vec, qvec) row (guide §4.1: opaque functions
-        # defeat column pruning unless the caller projects first)
-        eq = e.select("qvec")
+        # defeat column pruning unless the caller projects first);
+        # k-means is the one-subspace case of the PQ round
+        books = centroids[None]
         for _ in range(iters):
-            rows = _lloyd_stats(eq, centroids, "qvec", scale)
-            new = centroids.copy()
-            counts: dict[int, int] = {}
-            for r in rows:
-                if r["pos"] == 0:
-                    counts[r["cell"]] = int(r["n0"])
-            for r in rows:
-                c = r["cell"]
-                n = counts.get(c, 0)
-                if n > 0:
-                    new[c, r["pos"]] = float(int(r["qsum"])) / (scale * n)
-            centroids = new
-        return centroids
+            books = _lloyd_round(e.select("qvec"), books, scale, quantize=False)
+        return books[0]
     finally:
         if prepared is None:
             e.unpersist()
@@ -657,7 +705,7 @@ def _seed_kmeanspp(
         # integer-exact cost: min_j sum_d (qv_d - round(c_d*scale))^2,
         # computed in the quantized space so the total is order-free
         Cq = np.rint(C * fscale).astype(np.int64)
-        costed = _min_sq_dist_fixed(e, Cq)
+        costed = _nearest_fixed(e, Cq, cost=True)
         total = costed.agg(
             F.sum(F.col("__cost").cast("decimal(38,0)")).alias("t")
         ).collect()[0]["t"]
@@ -686,51 +734,31 @@ def _seed_kmeanspp(
     return _weighted_kmeans_lite(C, w, k)
 
 
-def _min_sq_dist_fixed(e: DataFrame, Cq: np.ndarray) -> DataFrame:
-    """Attach ``__cost`` = min squared distance (fixed-point integer) to
-    the seed set — one Arrow pass, int64-exact per row."""
-    import pandas as pd
+def _nearest_fixed(e: DataFrame, Cq: np.ndarray, cost: bool = False) -> DataFrame:
+    """One Arrow pass over ``e.qvec`` against the fixed-point seeds
+    ``Cq`` (exact distances): attach ``__seed``, the index of the
+    nearest seed (ties to the lowest index), or with ``cost`` attach
+    ``__cost``, the squared distance to it."""
     from pyspark.sql import types as T
 
+    out = "__cost" if cost else "__seed"
     schema = T.StructType(
-        list(e.schema.fields) + [T.StructField("__cost", T.LongType())]
+        list(e.schema.fields)
+        + [T.StructField(out, T.LongType() if cost else T.IntegerType())]
     )
 
     def run(batches):
         for pdf in batches:
             if len(pdf) == 0:
-                pdf["__cost"] = []
+                pdf[out] = []
                 yield pdf
                 continue
-            Q = np.array([np.asarray(v, dtype=np.int64) for v in pdf["qvec"]])
-            D = _exact_int_sq_dists(Q, Cq)
+            D = _exact_int_sq_dists(_mat(pdf["qvec"], np.int64), Cq)
             pdf = pdf.copy()
-            pdf["__cost"] = D.min(axis=1).astype(np.int64)
-            yield pdf
-
-    return e.mapInPandas(run, schema)
-
-
-def _nearest_fixed(e: DataFrame, Cq: np.ndarray) -> DataFrame:
-    """Attach ``__seed`` = index of the nearest seed (fixed-point exact
-    distances, ties to the lowest index) — one Arrow pass."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        list(e.schema.fields) + [T.StructField("__seed", T.IntegerType())]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf["__seed"] = []
-                yield pdf
-                continue
-            Q = np.array([np.asarray(v, dtype=np.int64) for v in pdf["qvec"]])
-            D = _exact_int_sq_dists(Q, Cq)
-            pdf = pdf.copy()
-            pdf["__seed"] = D.argmin(axis=1).astype(np.int32)
+            if cost:
+                pdf[out] = D.min(axis=1).astype(np.int64)
+            else:
+                pdf[out] = D.argmin(axis=1).astype(np.int32)
             yield pdf
 
     return e.mapInPandas(run, schema)
@@ -816,8 +844,7 @@ def kmeans_hierarchical(
 
     def refit(pdf):
         pdf = pdf.sort_values("id")  # pure function of the member SET
-        M = np.array([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
-        cent = _kmeans_lite(M, k=k_fine, iters=iters)
+        cent = _kmeans_lite(_mat(pdf["vec"]), k=k_fine, iters=iters)
         return pd.DataFrame(
             {
                 "cell": np.full(len(cent), int(pdf["__seed"].iloc[0]), dtype=np.int32),
@@ -835,6 +862,76 @@ def kmeans_hierarchical(
     return np.array(
         [np.asarray(r["centroid"], dtype=np.float64) for r in rows]
     )
+
+
+def _fit_quantizer(
+    corpus: DataFrame,
+    fit: str,
+    who: str,
+    id_col: str,
+    vec_col: str,
+    sample_size: int,
+    k: int | None = None,
+    pq: tuple[int, int] | None = None,
+    opts: dict | None = None,
+    auto_k: bool = False,
+) -> tuple:
+    """The one quantizer fit (see the module docstring), returning
+    ``(centroids, books, assigned)``.
+
+    ``k`` coarse centroids (``None``: no coarse quantizer, plain PQ);
+    ``pq=(m, ksub)`` adds PQ codebooks over the L2-normalized residuals
+    (IVFPQ when ``k`` is also given).  ``assigned`` is the persisted
+    :func:`_ivfpq_assign_resid` frame of a distributed IVFPQ fit, which
+    the caller unpersists; otherwise ``None``.  ``opts`` goes to the
+    distributed or hierarchical k-means.  ``auto_k`` marks a k sized
+    from the corpus: the sample fit caps it at
+    ``max(16, sample_size // 2)`` and warns.  ``who`` names the caller
+    in errors."""
+    modes = ("sample", "distributed") + (() if pq else ("hierarchical",))
+    if fit not in modes:
+        kind = "codebook_fit" if pq else "centroid_fit"
+        raise ValueError(f"{who}: unknown {kind} {fit!r}")
+    if fit == "sample":
+        cap = max(16, sample_size // 2)
+        if auto_k and k > cap:
+            import warnings
+
+            warnings.warn(
+                f"{who}: auto n_centroids {k} hit the driver-sample cap "
+                f"{cap} (sample_size // 2) — cells will exceed "
+                "target_cell_size and per-cell pair work grows "
+                "quadratically; raise sample_size or use "
+                "centroid_fit='distributed' (no cap)",
+                stacklevel=3,
+            )
+            k = cap
+        # LIMIT without ordering is whatever partition Spark reads first;
+        # ordering by id pins the sample (TakeOrderedAndProject: each
+        # partition keeps its top-N and the driver merges, no full sort)
+        rows = (
+            corpus.select(id_col, vec_col)
+            .orderBy(id_col)
+            .limit(sample_size)
+            .collect()
+        )
+        if not rows:
+            raise ValueError(f"{who}: empty corpus")
+        S = _mat(r[1] for r in rows)
+        if pq is None:
+            return _kmeans_lite(S, k=k), None, None
+        cents = None if k is None else _kmeans_lite(_unit(S), k=k)
+        return cents, pq_codebooks(_resid(S, cents)[1], *pq), None
+    if pq is None:
+        fitter = kmeans_distributed if fit == "distributed" else kmeans_hierarchical
+        cents = fitter(corpus, k=k, id_col=id_col, vec_col=vec_col, **(opts or {}))
+        return cents, None, None
+    if k is None:
+        books = pq_codebooks_distributed(
+            corpus, *pq, id_col=id_col, vec_col=vec_col
+        )
+        return None, books, None
+    return _ivfpq_fit_distributed(corpus, k, *pq, id_col, vec_col)
 
 
 def cosine_topk_ivf(
@@ -864,46 +961,14 @@ def cosine_topk_ivf(
     0.64/0.70 at nprobe=4, for ~1.0-1.09x the latency — the assign
     pass dominates, so probing more cells is nearly free until the
     candidate re-rank saturates; real corpora with neighbor structure
-    need fewer probes).  ``centroid_fit="sample"`` (default) fits once on a
-    driver-side sample (deterministic seed) — at 100 TB that sample is
-    still a few thousand rows, but it caps n_centroids at
-    sample_size/2; ``centroid_fit="distributed"`` fits with
-    :func:`kmeans_distributed` (whole-corpus fit, no cap);
-    ``centroid_fit="hierarchical"`` fits with
-    :func:`kmeans_hierarchical` (whole-corpus two-level fit, no
-    driver-side seeding reduction — the large-k path).
+    need fewer probes).  ``centroid_fit`` is ``"sample"`` (default),
+    ``"distributed"`` or ``"hierarchical"``; the fit modes and their caps
+    are in the module docstring.
     """
-    if centroid_fit == "distributed":
-        centroids = kmeans_distributed(
-            corpus, k=n_centroids, id_col=id_col, vec_col=vec_col
-        )
-    elif centroid_fit == "hierarchical":
-        centroids = kmeans_hierarchical(
-            corpus, k=n_centroids, id_col=id_col, vec_col=vec_col
-        )
-    elif centroid_fit == "sample":
-        # Deterministic sample: LIMIT without ordering is whatever
-        # partition Spark reads first — not stable across
-        # partitionings/AQE. Ordering by id pins the sample
-        # (TakeOrderedAndProject: no full sort, each partition keeps
-        # its top-N and the driver merges).
-        sample_rows = (
-            corpus.select(id_col, vec_col)
-            .orderBy(id_col)
-            .limit(sample_size)
-            .collect()
-        )
-        if not sample_rows:
-            raise ValueError("cosine_topk_ivf: empty corpus")
-        sample = np.array(
-            [np.asarray(r[1], dtype=np.float64) for r in sample_rows]
-        )
-        centroids = _kmeans_lite(sample, k=n_centroids)
-    else:
-        raise ValueError(
-            f"cosine_topk_ivf: unknown centroid_fit {centroid_fit!r}"
-        )
-
+    centroids = _fit_quantizer(
+        corpus, centroid_fit, "cosine_topk_ivf", id_col, vec_col,
+        sample_size, k=n_centroids,
+    )[0]
     c = _ivf_assign(corpus, centroids, id_col, vec_col)
     return _ivf_probe(
         c, centroids, queries, k, nprobe, id_col, vec_col, exclude_self
@@ -1001,12 +1066,11 @@ def write_ivf_index(
     Norms and double-cast vectors are stored, so probes never recompute
     them — the daily cost of vector search against a standing corpus
     becomes one broadcast of the query set and a pruned scan of the
-    probed cells.  Centroid fitting (``centroid_fit="sample"``) uses
-    the same deterministic ordered sample as the in-memory form —
-    parquet roundtrips doubles exactly, so indexed results are
-    bit-identical to the in-memory form (test-pinned);
-    ``centroid_fit="distributed"`` fits with :func:`kmeans_distributed`
-    (no sample cap on n_centroids).
+    probed cells.  ``centroid_fit`` fits exactly as the in-memory form
+    does (fit modes in the module docstring) — parquet roundtrips
+    doubles exactly, so indexed results are bit-identical to the
+    in-memory form (test-pinned).  The fit runs before the old tables
+    are dropped, so a failed fit leaves the standing index in place.
 
     Building always fits FRESH data-dependent centroids, so only
     ``mode="overwrite"`` is valid here — an "append" build would stack
@@ -1023,32 +1087,13 @@ def write_ivf_index(
             "under a different quantizer would corrupt the index; "
             "append daily arrivals with append_ivf_index instead"
         )
+    # fit first: a bad fit mode or an empty corpus raises before the
+    # standing index is dropped
+    centroids = _fit_quantizer(
+        corpus, centroid_fit, "write_ivf_index", id_col, vec_col,
+        sample_size, k=n_centroids,
+    )[0]
     reset_tables(spark, f"{name}_cells", f"{name}_centroids", f"{name}_meta")
-    if centroid_fit == "distributed":
-        centroids = kmeans_distributed(
-            corpus, k=n_centroids, id_col=id_col, vec_col=vec_col
-        )
-    elif centroid_fit == "hierarchical":
-        centroids = kmeans_hierarchical(
-            corpus, k=n_centroids, id_col=id_col, vec_col=vec_col
-        )
-    elif centroid_fit == "sample":
-        sample_rows = (
-            corpus.select(id_col, vec_col)
-            .orderBy(id_col)
-            .limit(sample_size)
-            .collect()
-        )
-        if not sample_rows:
-            raise ValueError("write_ivf_index: empty corpus")
-        sample = np.array(
-            [np.asarray(r[1], dtype=np.float64) for r in sample_rows]
-        )
-        centroids = _kmeans_lite(sample, k=n_centroids)
-    else:
-        raise ValueError(
-            f"write_ivf_index: unknown centroid_fit {centroid_fit!r}"
-        )
     assigned = _ivf_assign(corpus, centroids, id_col, vec_col)
     write_bucketed(
         assigned, f"{name}_cells",
@@ -1299,75 +1344,26 @@ def semantic_dedup(
     equidistant to two centroids); more cells means more boundary, the
     recall side of the same knob.
 
-    Centroid fitting (``centroid_fit``): ``"sample"`` (default) fits
-    driver-side from a bounded sample — k capped at sample_size // 2,
-    which at the default (2000, 256) serves corpora up to ~256k
-    vectors. ``"distributed"`` fits with :func:`kmeans_distributed`
-    (k-means|| seeding + integer-exact distributed Lloyd): no sample
-    cap — ``n_centroids="auto"`` then scales k with the corpus
-    indefinitely, keeping cell size (and with it per-cell pair work)
-    constant at any corpus size. ``"hierarchical"`` fits with
-    :func:`kmeans_hierarchical` (two-level whole-corpus fit): also
-    uncapped, and additionally free of kmeans_distributed's
-    O(k * candidates * d) driver-side seeding reduction — the path for
-    k beyond tens of thousands of cells. All three fits are
-    deterministic.
+    Centroid fitting (``centroid_fit``, modes and caps in the module
+    docstring; ``centroid_fit_opts`` goes to the distributed or
+    hierarchical k-means): the ``"sample"`` cap on an automatic k is
+    sample_size // 2, which at the default (2000, 256) serves corpora
+    up to ~256k vectors; ``"distributed"`` and ``"hierarchical"`` are
+    uncapped, so ``n_centroids="auto"`` keeps cell size (and with it
+    per-cell pair work) constant at any corpus size.
 
     Output: (id, component, is_survivor) — the dedup_survivors shape.
     """
     from .graph import dedup_survivors
     from .util import finalize
 
-    if n_centroids == "auto":
-        n_total = df.count()
-        n_centroids = max(16, -(-n_total // target_cell_size))  # ceil div
-        if centroid_fit == "sample":
-            cap = max(16, sample_size // 2)
-            if n_centroids > cap:
-                import warnings
-
-                warnings.warn(
-                    f"semantic_dedup: auto n_centroids {n_centroids} hit "
-                    f"the driver-sample cap {cap} (sample_size // 2) — "
-                    "cells will exceed target_cell_size and per-cell "
-                    "pair work grows quadratically; raise sample_size "
-                    "or use centroid_fit='distributed' (no cap)",
-                    stacklevel=2,
-                )
-            n_centroids = min(n_centroids, cap)
-    if centroid_fit == "distributed":
-        centroids = kmeans_distributed(
-            df,
-            k=int(n_centroids),
-            id_col=id_col,
-            vec_col=vec_col,
-            **(centroid_fit_opts or {}),
-        )
-    elif centroid_fit == "hierarchical":
-        centroids = kmeans_hierarchical(
-            df,
-            k=int(n_centroids),
-            id_col=id_col,
-            vec_col=vec_col,
-            **(centroid_fit_opts or {}),
-        )
-    elif centroid_fit == "sample":
-        sample_rows = (
-            df.select(id_col, vec_col)
-            .orderBy(id_col)
-            .limit(sample_size)
-            .collect()
-        )
-        if not sample_rows:
-            raise ValueError("semantic_dedup: empty corpus")
-        sample = np.array(
-            [np.asarray(r[1], dtype=np.float64) for r in sample_rows]
-        )
-        centroids = _kmeans_lite(sample, k=int(n_centroids))
-    else:
-        raise ValueError(
-            f"semantic_dedup: unknown centroid_fit {centroid_fit!r}"
-        )
+    auto = n_centroids == "auto"
+    if auto:
+        n_centroids = max(16, -(-df.count() // target_cell_size))  # ceil div
+    centroids = _fit_quantizer(
+        df, centroid_fit, "semantic_dedup", id_col, vec_col, sample_size,
+        k=int(n_centroids), opts=centroid_fit_opts, auto_k=auto,
+    )[0]
 
     e = with_norm(df, vec_col).select(
         F.col(id_col).alias("id"),
@@ -1619,57 +1615,29 @@ def pq_codebooks_distributed(
     seed: int = 11,
     prepared_resid: DataFrame | None = None,
 ) -> np.ndarray:
-    """Distributed per-subspace PQ codebook fit: the WHOLE corpus
-    trains every subspace codebook — removes the last trainer that
-    depended on a driver-side ``limit(sample_size)`` sample (r6
-    verdict item 3; :func:`pq_codebooks` over a sample remains the
-    FAISS-standard fast path and the equality baseline).
+    """Distributed per-subspace PQ codebook fit over the WHOLE corpus:
+    the ``"distributed"`` codebook fit of the module docstring
+    (:func:`pq_codebooks` over a sample is the ``"sample"`` fit and the
+    equality baseline).  Returns ``(m, ksub, d/m)``.
 
-    FUSED across subspaces: each Lloyd round is ONE Arrow pass that
-    L2-normalizes a batch, optionally subtracts the nearest coarse
-    centroid (``coarse_cents`` given -> RESIDUAL codebooks, the IVFPQ
-    trainer), quantizes to fixed point, assigns every row in all m
-    subspaces, and reduces the batch to at most ``m * ksub`` partial
-    rows (cell count + int64 coordinate sums).  Corpus passes per fit
-    = 1 (init sample) + ``iters``, independent of m — vs
-    ``m * (seed_rounds + iters)`` for m separate
-    :func:`kmeans_distributed` calls.
+    One prep pass (:func:`_ivfpq_assign_resid`, persisted DISK_ONLY)
+    L2-normalizes every row and, with ``coarse_cents``, subtracts its
+    nearest coarse centroid (RESIDUAL codebooks, the IVFPQ trainer).
+    Init takes the first ``ksub`` distinct subvectors per subspace from
+    a hash-ordered sample of ``4 * ksub`` rows (md5 of id + seed, ties
+    by id: the same rows under any partitioning); ``init`` overrides it
+    with explicit ``(m, ksub, d/m)`` codebooks.  Then ``iters``
+    :func:`_lloyd_round` rounds fit all m subspaces at once, so corpus
+    passes per fit = 1 + ``iters``, independent of m.  Driver state is
+    the ``ksub * d`` codebook doubles, independent of corpus size.
 
-    Determinism (the registry requirement): normalization/residual/
-    quantization are row-local (split-invariant); assignments argmin
-    over :func:`_exact_int_sq_dists` on the quantized coordinates;
-    the cross-batch merge sums int64 coordinates as decimal(38,0) —
-    exact and order-free — so the codebooks are identical under any
-    partitioning/AQE split.  Init is a hash-ordered corpus sample
-    (md5 of id + seed, ties by id: a total order, so the same
-    ``m * ksub`` subvectors are chosen under any partitioning);
-    ``init`` overrides it with explicit ``(m, ksub, d/m)`` codebooks
-    (the pytest equality pin vs the sample fit uses this).
-
-    Driver-side state: the ``(m, ksub, d/m)`` codebook matrix =
-    ``ksub * d`` doubles, plus ``ksub * d`` aggregate rows per round —
-    independent of corpus size.  Returns ``(m, ksub, d/m)``.
-
-    ``prepared_resid``: an :func:`_ivfpq_assign_resid` frame whose
-    ``resid`` column is EXACTLY what this function's own prep pass
-    would compute (L2-normalized, coarse-residual float64) — the fit
-    rounds then read it DIRECTLY, quantizing each batch with the same
-    ``np.rint`` the prep pass applies (bit-identical ``qvec`` values;
-    pinned in tests/test_ivfpq_shared_assign.py), instead of
-    materializing a second corpus-sized fixed-point copy: one
-    persisted corpus-scale frame per index build, not two (r10 ADVICE
-    — the double DISK_ONLY persist doubled build scratch footprint).
-    Requires ``coarse_cents`` (the residuals are only meaningful
-    relative to the quantizer that produced them; ``ValueError``
-    otherwise); the caller owns the frame's persistence and guarantees
-    it matches ``coarse_cents`` — the residual dimensionality is
-    checked against it, with or without ``init``, and an empty frame
-    is refused.  ``corpus`` and ``vec_col`` are ignored when it is
-    given.
+    ``prepared_resid``: an :func:`_ivfpq_assign_resid` frame computed
+    with ``coarse_cents`` (required with it; the caller owns its
+    persistence).  The rounds read it in place of the prep pass, so an
+    index build persists one corpus-sized frame, not two.  Its residual
+    dim is checked against ``coarse_cents`` (also with ``init``) and an
+    empty frame is refused; ``corpus`` and ``vec_col`` are then unused.
     """
-    import pandas as pd
-    from pyspark.sql import types as T
-
     if m < 1 or ksub < 1:
         raise ValueError("pq_codebooks_distributed: m and ksub must be >= 1")
     cents = (
@@ -1677,82 +1645,23 @@ def pq_codebooks_distributed(
         if coarse_cents is None
         else np.asarray(coarse_cents, dtype=np.float64)
     )
-    c_sq = None if cents is None else (cents**2).sum(axis=1)
-    fscale = float(scale)
-
-    prep_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("qvec", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    def prep(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            nrm = np.linalg.norm(V, axis=1)
-            V = V / np.where(nrm == 0, 1.0, nrm)[:, None]
-            if cents is not None:
-                cell = (-2.0 * (V @ cents.T) + c_sq[None, :]).argmin(axis=1)
-                V = V - cents[cell]
-            Qv = np.rint(V * fscale).astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].astype("int64"),
-                    "qvec": list(Qv),
-                }
-            )
-
-    resid_mode = prepared_resid is not None
-    if resid_mode:
-        if cents is None:
-            raise ValueError(
-                "pq_codebooks_distributed: prepared_resid requires "
-                "coarse_cents — the stored residuals are only "
-                "meaningful relative to the coarse quantizer that "
-                "produced them"
-            )
-        # read the caller-persisted (id, resid) frame directly; the
-        # residual dim equals the coarse quantizer's dim, so no probe
-        # job is needed for d
-        prepared = prepared_resid.select("id", "resid")
-        d = int(cents.shape[1])
-    else:
-        prepared = (
-            corpus.select(id_col, vec_col)
-            .mapInPandas(prep, prep_schema)
-            .persist(StorageLevel.DISK_ONLY)
+    own = prepared_resid is None
+    if own:
+        prepared = _ivfpq_assign_resid(corpus, cents, id_col, vec_col).persist(
+            StorageLevel.DISK_ONLY
         )
+    elif cents is None:
+        raise ValueError(
+            "pq_codebooks_distributed: prepared_resid requires "
+            "coarse_cents — the stored residuals are only "
+            "meaningful relative to the coarse quantizer that "
+            "produced them"
+        )
+    else:
+        prepared = prepared_resid.select("id", "resid")
+    fscale = float(scale)
     try:
-        if not resid_mode:
-            head = prepared.select(F.size("qvec").alias("d")).limit(1).collect()
-            if not head:
-                raise ValueError("pq_codebooks_distributed: empty corpus")
-            d = int(head[0]["d"])
-        if d % m != 0:
-            raise ValueError(
-                f"pq_codebooks_distributed: dim {d} not divisible by m={m}"
-            )
-        dsub = d // m
-
-        if init is not None:
-            books = np.asarray(init, dtype=np.float64).copy()
-            if books.shape != (m, ksub, dsub):
-                raise ValueError(
-                    "pq_codebooks_distributed: init shape "
-                    f"{books.shape} != {(m, ksub, dsub)}"
-                )
-            # one stored residual is enough for the dim check below
-            rows = prepared.limit(1).collect() if resid_mode else []
-        else:
-            # hash-ordered init sample: 4*ksub rows gives each subspace
-            # slack to pick ksub DISTINCT subvectors (duplicate init
-            # centroids are tolerated on degenerate corpora — Lloyd
-            # leaves an empty cell's centroid in place)
+        if init is None:
             hkey = F.md5(F.concat_ws("|", F.col("id"), F.lit(f"pqinit|{seed}")))
             rows = (
                 prepared.withColumn("__h", hkey)
@@ -1760,121 +1669,48 @@ def pq_codebooks_distributed(
                 .limit(4 * ksub)
                 .collect()
             )
-        if resid_mode:
-            if not rows:
-                raise ValueError("pq_codebooks_distributed: empty corpus")
-            if len(rows[0]["resid"]) != d:
+        else:
+            rows = prepared.limit(1).collect()
+        if not rows:
+            raise ValueError("pq_codebooks_distributed: empty corpus")
+        d = len(rows[0]["resid"])
+        if cents is not None and d != cents.shape[1]:
+            raise ValueError(
+                f"pq_codebooks_distributed: prepared_resid dim {d} != "
+                f"coarse_cents dim {cents.shape[1]}"
+            )
+        if d % m != 0:
+            raise ValueError(
+                f"pq_codebooks_distributed: dim {d} not divisible by m={m}"
+            )
+        dsub = d // m
+        if init is not None:
+            books = np.asarray(init, dtype=np.float64).copy()
+            if books.shape != (m, ksub, dsub):
                 raise ValueError(
-                    "pq_codebooks_distributed: prepared_resid dim "
-                    f"{len(rows[0]['resid'])} != coarse_cents dim {d}"
+                    "pq_codebooks_distributed: init shape "
+                    f"{books.shape} != {(m, ksub, dsub)}"
                 )
-        if init is None:
-            if resid_mode:
-                S = np.rint(
-                    np.array(
-                        [np.asarray(r["resid"], dtype=np.float64) for r in rows]
-                    )
-                    * fscale
-                ).astype(np.int64)
-            else:
-                S = np.array(
-                    [np.asarray(r["qvec"], dtype=np.int64) for r in rows]
-                )
+        else:
+            # 4*ksub rows give each subspace slack to pick ksub DISTINCT
+            # subvectors (duplicates are tolerated on degenerate corpora:
+            # Lloyd leaves an empty cell's centroid in place)
+            S = np.rint(_mat(r["resid"] for r in rows) * fscale).astype(np.int64)
             books = np.empty((m, ksub, dsub), dtype=np.float64)
             for j in range(m):
                 sub = S[:, j * dsub : (j + 1) * dsub]
                 _, first_idx = np.unique(sub, axis=0, return_index=True)
-                keep = np.sort(first_idx)[:ksub]
-                chosen = sub[keep]
+                chosen = sub[np.sort(first_idx)[:ksub]]
                 if len(chosen) < ksub:  # degenerate: recycle in order
-                    reps = -(-ksub // len(chosen))
-                    chosen = np.tile(chosen, (reps, 1))[:ksub]
+                    chosen = np.tile(chosen, (-(-ksub // len(chosen)), 1))[:ksub]
                 books[j] = chosen.astype(np.float64) / fscale
-
-        stats_schema = T.StructType(
-            [
-                T.StructField("j", T.IntegerType()),
-                T.StructField("cell", T.IntegerType()),
-                T.StructField("n", T.LongType()),
-                T.StructField("qsum", T.ArrayType(T.LongType())),
-            ]
-        )
-
-        # each round ships exactly one column through Arrow (guide
-        # §4.1); resid batches are quantized in-batch with the same
-        # np.rint the prep pass applies — bit-identical qvec values
-        data = prepared.select("resid" if resid_mode else "qvec")
+        # each round ships exactly one column through Arrow (guide §4.1)
+        data = prepared.select("resid")
         for _ in range(iters):
-            Cq = np.rint(books * fscale).astype(np.int64)  # (m, ksub, dsub)
-
-            def stats(batches, Cq=Cq):
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    if resid_mode:
-                        Q = np.rint(
-                            np.array(
-                                [
-                                    np.asarray(v, dtype=np.float64)
-                                    for v in pdf["resid"]
-                                ]
-                            )
-                            * fscale
-                        ).astype(np.int64)
-                    else:
-                        Q = np.array(
-                            [np.asarray(v, dtype=np.int64) for v in pdf["qvec"]]
-                        )
-                    out_j, out_c, out_n, out_s = [], [], [], []
-                    for j in range(m):
-                        Qj = np.ascontiguousarray(
-                            Q[:, j * dsub : (j + 1) * dsub]
-                        )
-                        cells = _exact_int_sq_dists(Qj, Cq[j]).argmin(axis=1)
-                        present = np.unique(cells)
-                        acc = np.zeros((ksub, dsub), dtype=np.int64)
-                        np.add.at(acc, cells, Qj)
-                        cnt = np.bincount(cells, minlength=ksub)
-                        out_j.append(np.full(len(present), j, dtype=np.int32))
-                        out_c.append(present.astype(np.int32))
-                        out_n.append(cnt[present].astype(np.int64))
-                        out_s.extend(acc[c] for c in present)
-                    yield pd.DataFrame(
-                        {
-                            "j": np.concatenate(out_j),
-                            "cell": np.concatenate(out_c),
-                            "n": np.concatenate(out_n),
-                            "qsum": out_s,
-                        }
-                    )
-
-            merged = (
-                data.mapInPandas(stats, stats_schema)
-                .select("j", "cell", "n", F.posexplode("qsum").alias("pos", "qs"))
-                .groupBy("j", "cell", "pos")
-                .agg(
-                    F.sum(F.col("qs").cast("decimal(38,0)")).alias("qsum"),
-                    F.sum(
-                        F.when(F.col("pos") == 0, F.col("n")).otherwise(F.lit(0))
-                    ).alias("n0"),
-                )
-                .collect()
-            )
-            counts: dict[tuple[int, int], int] = {}
-            for r in merged:
-                if r["pos"] == 0:
-                    counts[(r["j"], r["cell"])] = int(r["n0"])
-            new = books.copy()
-            for r in merged:
-                n = counts.get((r["j"], r["cell"]), 0)
-                if n > 0:
-                    new[r["j"], r["cell"], r["pos"]] = float(int(r["qsum"])) / (
-                        fscale * n
-                    )
-            books = new
+            books = _lloyd_round(data, books, scale, quantize=True)
         return books
     finally:
-        if not resid_mode:
+        if own:
             prepared.unpersist()
 
 
@@ -1895,233 +1731,50 @@ def pq_topk(
     """Approximate top-k via PRODUCT QUANTIZATION with exact
     refinement — the FAISS-style compressed-domain scan, DataFrame-
     shaped, completing the ANN family (brute force / SRP-LSH / IVF /
-    PQ):
+    PQ).  PQ is IVFPQ with one coarse cell (see the module docstring):
+    the codebooks come from :func:`_fit_quantizer`, then
+    :func:`_ivfpq_encode` and :func:`_ivfpq_probe` run with the single
+    zero centroid and ``nprobe=1``.
 
       1. codebooks: pass ``codebooks`` (shape ``(m, ksub, d/m)``) to
          reuse a PRECOMPUTED fit — the 100 TB deployment shape, where
-         codebooks are trained once at index build
-         (:func:`write_ivfpq_index` / :func:`pq_codebooks_distributed`)
-         and every query amortizes them; otherwise
-         ``codebook_fit="sample"`` (default) is the FAISS-standard
-         fast path — a deterministic ``orderBy(id).limit(sample_size)``
-         sample fit driver-side — and ``codebook_fit="distributed"``
-         trains each of the m subspace codebooks on the WHOLE corpus
-         with :func:`pq_codebooks_distributed` (fused rounds: one
-         Arrow pass per Lloyd iteration regardless of m, integer-exact
-         reductions — no driver-sample trainer cap, but 1+iters full
-         corpus passes PER CALL, which is an index-build cost, not an
+         codebooks are trained once at index build and every query
+         amortizes them; otherwise ``codebook_fit="sample"`` (default,
+         the FAISS-standard fast path) or ``"distributed"`` (1 + iters
+         full corpus passes per call: an index-build cost, not an
          ad-hoc-query cost).  Either way: m subspaces x ksub centroids
          over L2-normalized vectors, so L2 ranks like cosine:
          ||a-b||^2 = 2 - 2cos on the unit sphere,
       2. ENCODE: one Arrow pass maps each corpus vector to m small
          codes — m bytes of quantized state per vector instead of
-         d*8, the ~64x memory compression that lets a 100 TB vector
-         corpus live scan-resident where raw vectors cannot.
-         Resolution knob (r8, measured): subspace COUNT m beats
+         d*8.  Resolution knob (r8, measured): subspace COUNT m beats
          centroid count ksub per byte of code — on 20k-row
          structure-free noise, m=16/ksub=16 reaches recall@5 0.92
          where m=8/ksub=16 floors at 0.54 and m=8/ksub=256 needs 2x
          the latency for 0.90 (ANN_RECALL_r8.json); pick the largest
          m dividing d that your code-byte budget allows,
-      3. ADC scan: per query a tiny (m x ksub) lookup table of
-         partial squared distances is built driver-side (queries are
-         a bounded set — the scalar-broadcast pattern); scoring the
-         corpus is pure table-gather adds over the codes, and each
-         Arrow batch emits only its local top-``shortlist`` per query
-         (map-side top-k: rows out are O(batches * queries *
-         shortlist), never corpus-sized),
-      4. REFINE: the per-query shortlist joins back to the raw
-         vectors (shortlist-sized, not corpus-sized) and exact
-         cosine re-ranks to the final top-k.
-
-    Determinism: codebooks and codes are pure functions of the data
-    (seeded fits, argmin ties to the lowest code); ADC scores are a
-    fixed-order 8-term float64 sum per row; every selection —
-    local batch top-R, global top-R, final top-k — orders by
-    (score, neighbor_id), a total order, so the result is identical
-    under any batch/partition split (the distributed top-k
-    invariant: a global top-R over per-batch top-Rs equals the top-R
-    over all rows).
+      3. ADC scan with a map-side per-batch top-``shortlist``, then
+      4. exact-cosine REFINE of each query's shortlist.
 
     Output: ``(query_id, rk, neighbor_id)`` — same shape as
-    :func:`cosine_topk_bruteforce`.
+    :func:`cosine_topk_bruteforce`, identical under any partitioning.
     """
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    if shortlist == "auto":
-        # corpus-size-INDEPENDENT refine bound (r6 verdict item 4 —
-        # the old 5%-of-corpus policy made the exact-rerank stage
-        # linear in the corpus and cost an extra count() job): the ADC
-        # rank displacement is bounded by how many candidates can sit
-        # within the quantization-error band around the k-th true
-        # distance, which shrinks with m (more subspaces = finer
-        # scores); 64*k (= 4*k*ksub at the ksub=16 default) covers the
-        # worst displacement observed on structure-free noise at every
-        # tested scale (sf0.01/0.1/1: exact-top-20 members never
-        # ranked past ~200 by ADC; real corpora with neighbor
-        # structure displace far less).  The recall pins in
-        # tests/test_extensions.py and the registered summary oracles
-        # gate this bound at every SF.
-        shortlist = max(100, 64 * k)
-    if codebooks is not None:
+    if codebooks is None:
+        _, books, _ = _fit_quantizer(
+            corpus, codebook_fit, "pq_topk", id_col, vec_col, sample_size,
+            pq=(m, ksub),
+        )
+    else:
         books = np.asarray(codebooks, dtype=np.float64)
-        if books.ndim != 3 or books.shape[0] != m or books.shape[1] != ksub:
+        if books.ndim != 3 or books.shape[:2] != (m, ksub):
             raise ValueError(
                 f"pq_topk: precomputed codebooks shape {books.shape} does "
                 f"not match (m={m}, ksub={ksub}, d/m)"
             )
-        dsub = books.shape[2]
-        d = m * dsub
-    elif codebook_fit == "distributed":
-        books = pq_codebooks_distributed(
-            corpus, m, ksub, id_col=id_col, vec_col=vec_col
-        )  # (m, ksub, dsub)
-        dsub = books.shape[2]
-        d = m * dsub
-    elif codebook_fit == "sample":
-        sample_rows = (
-            corpus.select(id_col, vec_col)
-            .orderBy(id_col)
-            .limit(sample_size)
-            .collect()
-        )
-        if not sample_rows:
-            raise ValueError("pq_topk: empty corpus")
-        S = np.array([np.asarray(r[1], dtype=np.float64) for r in sample_rows])
-        norms = np.linalg.norm(S, axis=1)
-        S = S / np.where(norms == 0, 1.0, norms)[:, None]
-        d = S.shape[1]
-        dsub = d // m
-        books = pq_codebooks(S, m, ksub)  # (m, ksub, dsub)
-    else:
-        raise ValueError(f"pq_topk: unknown codebook_fit {codebook_fit!r}")
-
-    code_schema = T.StructType(
-        [
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
-    b_sq = (books**2).sum(axis=2)  # (m, ksub)
-
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            nrm = np.linalg.norm(V, axis=1)
-            V = V / np.where(nrm == 0, 1.0, nrm)[:, None]
-            codes = np.empty((len(V), m), dtype=np.int32)
-            for j in range(m):
-                sub = V[:, j * dsub : (j + 1) * dsub]
-                dist = (
-                    -2.0 * (sub @ books[j].T) + b_sq[j][None, :]
-                )  # + ||sub||^2 is rank-constant per row
-                codes[:, j] = dist.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf[id_col].astype("int64"),
-                    "codes": list(codes),
-                }
-            )
-
-    coded = corpus.mapInPandas(encode, code_schema)
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        raise ValueError("pq_topk: empty queries")
-    q_ids = np.array([int(r[0]) for r in q_rows], dtype=np.int64)
-    Q = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    qn = np.linalg.norm(Q, axis=1)
-    Q = Q / np.where(qn == 0, 1.0, qn)[:, None]
-    # per-query ADC tables: T[q, j, c] = ||q_j - book[j][c]||^2
-    tables = np.stack(
-        [
-            np.stack(
-                [
-                    ((Q[:, j * dsub : (j + 1) * dsub][qi] - books[j]) ** 2).sum(
-                        axis=1
-                    )
-                    for j in range(m)
-                ]
-            )
-            for qi in range(len(Q))
-        ]
-    )  # (nq, m, ksub)
-
-    adc_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("adc", T.DoubleType()),
-        ]
-    )
-    R = shortlist
-    excl = exclude_self
-
-    def adc_scan(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.array(list(pdf["codes"]), dtype=np.int64)  # (n, m)
-            ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            cols = np.arange(m)
-            out_q, out_i, out_s = [], [], []
-            for qi in range(len(q_ids)):
-                s = tables[qi][cols[None, :], C].sum(axis=1)  # (n,)
-                mask = ids != q_ids[qi] if excl else np.ones(len(ids), bool)
-                sm, im = s[mask], ids[mask]
-                # local top-R by (score, id): lexsort is stable+total
-                order = np.lexsort((im, sm))[:R]
-                out_q.append(np.full(len(order), q_ids[qi], dtype=np.int64))
-                out_i.append(im[order])
-                out_s.append(sm[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_i),
-                    "adc": np.concatenate(out_s),
-                }
-            )
-
-    cand = coded.mapInPandas(adc_scan, adc_schema)
-    w_r = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    short = (
-        cand.withColumn("__r", F.row_number().over(w_r))
-        .filter(F.col("__r") <= R)
-        .select("query_id", "neighbor_id")
-    )
-
-    nvec = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("__vec").alias("nvec"),
-        F.col("__norm").alias("nnorm"),
-    )
-    qvec = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col("__vec").alias("qvec"),
-        F.col("__norm").alias("qnorm"),
-    )
-    refined = (
-        short.join(nvec, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .withColumn(
-            "cos",
-            dot(F.col("qvec"), F.col("nvec")) / (F.col("qnorm") * F.col("nnorm")),
-        )
-    )
-    w_k = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        refined.withColumn("rk", F.row_number().over(w_k).cast("long"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "rk", "neighbor_id")
+    Z = np.zeros((1, m * books.shape[2]))
+    return _ivfpq_probe(
+        _ivfpq_encode(corpus, Z, books, id_col, vec_col), Z, books, corpus,
+        queries, k, 1, shortlist, id_col, vec_col, exclude_self,
     )
 
 
@@ -2136,118 +1789,92 @@ def _ivfpq_fit(
     codebook_fit: str = "distributed",
     return_assigned: bool = False,
 ) -> tuple:
-    """Fit the IVFPQ quantizer pair: coarse centroids over
-    L2-normalized vectors + RESIDUAL product-quantization codebooks
-    (residuals v - centroid are smaller and better centered than raw
-    vectors — the reason IVFPQ encodes them).
+    """Fit the IVFPQ quantizer pair with :func:`_fit_quantizer`: coarse
+    centroids ``(k, d)`` over L2-normalized vectors and RESIDUAL PQ
+    codebooks ``(m, ksub, d/m)`` (residuals v - centroid are smaller and
+    better centered than raw vectors — the reason IVFPQ encodes them).
 
-    ``codebook_fit="distributed"`` (default) fits BOTH quantizers on
-    the whole corpus — coarse centroids with :func:`kmeans_distributed`
-    over the JVM-normalized vectors, residual codebooks with
-    :func:`pq_codebooks_distributed` (``coarse_cents`` mode) — no
-    driver-sample trainer cap anywhere.  The coarse fit seeds from a
-    hash-ordered whole-corpus sample (md5 of id, ties by id — one
-    TakeOrdered job, deterministic under any partitioning) instead of
-    the full k-means|| reduction, then runs 3 distributed Lloyd
-    rounds: for an IVF coarse quantizer the cells only PARTITION
-    candidates (recall is governed by nprobe, and the ADC scores are
-    exact within probed cells), so seeding quality matters far less
-    than job count — k-means|| seeding spent ~5 extra Spark jobs per
-    fit for no measurable recall gain here (the recall pins and
-    summary oracles gate this at every SF).  ``codebook_fit="sample"``
-    is the FAISS-standard fast path over the deterministic ordered
-    sample.  Returns ``(centroids (k, d), books (m, ksub, d/m))``.
-
-    ``return_assigned=True`` additionally returns the persisted
-    :func:`_ivfpq_assign_resid` frame the distributed fit computed
-    (``None`` for the sample fit) so the encode step can reuse it
-    instead of re-scanning the corpus — caller owns the unpersist."""
-    if codebook_fit == "distributed":
-        unit = with_norm(corpus, vec_col).select(
-            F.col(id_col).alias(id_col),
-            # element-wise divide; __norm is lambda-captured so it may
-            # re-inline per element (O(d) each) — at vector dims that
-            # is d^2 flops/row, dwarfed by the Arrow fit passes
-            F.transform(
-                F.col("__vec"),
-                lambda x: x
-                / F.when(F.col("__norm") == 0, F.lit(1.0)).otherwise(
-                    F.col("__norm")
-                ),
-            ).alias(vec_col),
-        )
-        # ONE materialization of the normalized corpus serves both the
-        # seed sample and the Lloyd rounds (guide §2.4): previously the
-        # seed TakeOrdered scanned the raw corpus through the O(d^2)
-        # normalize transform and kmeans_distributed then re-scanned it
-        # to build its persisted (id, vec, qvec) frame — the frame is
-        # now built first (the exact expression kmeans_distributed
-        # would build) and the seed is taken FROM it, saving a full
-        # corpus pass per build.
-        e = unit.select(
-            F.col(id_col).alias("id"),
-            _as_double(F.col(vec_col)).alias("vec"),
-            _quantized(vec_col, 1 << 20).alias("qvec"),
-        ).persist()
-        try:
-            hkey = F.md5(F.concat_ws("|", F.col("id"), F.lit("ivfpqseed")))
-            seed_rows = (
-                e.withColumn("__h", hkey)
-                .orderBy("__h", "id")
-                .limit(n_centroids)
-                .select("vec")
-                .collect()
-            )
-            if not seed_rows:
-                raise ValueError("ivfpq: empty corpus")
-            init = np.array(
-                [np.asarray(r["vec"], dtype=np.float64) for r in seed_rows]
-            )
-            cents = kmeans_distributed(
-                unit, k=len(init), id_col=id_col, vec_col=vec_col,
-                iters=3, init=init, prepared=e,
-            )
-        finally:
-            e.unpersist()
-        # ONE shared normalize+assign+residual pass feeds both the
-        # codebook fit's quantization and (via return_assigned) the
-        # encode step — previously each re-scanned the raw corpus to
-        # recompute it (guide §8: move the heavy read once)
-        assigned = _ivfpq_assign_resid(corpus, cents, id_col, vec_col).persist(
-            StorageLevel.DISK_ONLY
-        )
-        try:
-            books = pq_codebooks_distributed(
-                corpus, m, ksub, id_col=id_col, vec_col=vec_col,
-                coarse_cents=cents, iters=3, prepared_resid=assigned,
-            )
-        except Exception:
-            assigned.unpersist()
-            raise
-        if return_assigned:
-            return cents, books, assigned
-        assigned.unpersist()
-        return cents, books
-    if codebook_fit != "sample":
-        raise ValueError(f"ivfpq: unknown codebook_fit {codebook_fit!r}")
-    sample_rows = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_size).collect()
+    ``return_assigned=True`` also returns the persisted
+    :func:`_ivfpq_assign_resid` frame of the distributed fit (``None``
+    for the sample fit), so the encode can reuse it instead of
+    re-scanning the corpus; the caller unpersists it."""
+    cents, books, assigned = _fit_quantizer(
+        corpus, codebook_fit, "ivfpq", id_col, vec_col, sample_size,
+        k=n_centroids, pq=(m, ksub),
     )
-    if not sample_rows:
-        raise ValueError("ivfpq: empty corpus")
-    S = np.array([np.asarray(r[1], dtype=np.float64) for r in sample_rows])
-    nrm = np.linalg.norm(S, axis=1)
-    S = S / np.where(nrm == 0, 1.0, nrm)[:, None]
-    d = S.shape[1]
-    if d % m != 0:
-        raise ValueError(f"ivfpq: dim {d} not divisible by m={m}")
-    cents = _kmeans_lite(S, k=n_centroids)
-    c_sq = (cents**2).sum(axis=1)
-    assign_s = (-2.0 * (S @ cents.T) + c_sq[None, :]).argmin(axis=1)
-    books = pq_codebooks(S - cents[assign_s], m, ksub)
     if return_assigned:
-        return cents, books, None
+        return cents, books, assigned
+    if assigned is not None:
+        assigned.unpersist()
     return cents, books
+
+
+def _ivfpq_fit_distributed(
+    corpus: DataFrame, k: int, m: int, ksub: int, id_col: str, vec_col: str
+) -> tuple:
+    """The ``"distributed"`` IVFPQ fit: ``(centroids, books, assigned)``.
+
+    Coarse centroids: :func:`kmeans_distributed` over the JVM-normalized
+    vectors, seeded from a hash-ordered whole-corpus sample (md5 of id,
+    ties by id — one TakeOrdered job) instead of the k-means|| reduction,
+    then 3 Lloyd rounds.  For an IVF coarse quantizer the cells only
+    PARTITION candidates (recall is governed by nprobe, and ADC scores
+    are exact within probed cells), so seeding quality matters far less
+    than job count; the recall pins and summary oracles gate this at
+    every SF.  Residual codebooks: :func:`pq_codebooks_distributed` (3
+    rounds) over ONE persisted :func:`_ivfpq_assign_resid` pass, which
+    is returned for the encode; the caller unpersists it."""
+    unit = with_norm(corpus, vec_col).select(
+        F.col(id_col).alias(id_col),
+        # element-wise divide; __norm is lambda-captured so it may
+        # re-inline per element (O(d) each) — at vector dims that
+        # is d^2 flops/row, dwarfed by the Arrow fit passes
+        F.transform(
+            F.col("__vec"),
+            lambda x: x
+            / F.when(F.col("__norm") == 0, F.lit(1.0)).otherwise(
+                F.col("__norm")
+            ),
+        ).alias(vec_col),
+    )
+    # ONE materialization of the normalized corpus serves both the seed
+    # sample and the Lloyd rounds (guide §2.4): the exact (id, vec, qvec)
+    # frame kmeans_distributed would build
+    e = unit.select(
+        F.col(id_col).alias("id"),
+        _as_double(F.col(vec_col)).alias("vec"),
+        _quantized(vec_col, 1 << 20).alias("qvec"),
+    ).persist()
+    try:
+        hkey = F.md5(F.concat_ws("|", F.col("id"), F.lit("ivfpqseed")))
+        seed_rows = (
+            e.withColumn("__h", hkey)
+            .orderBy("__h", "id")
+            .limit(k)
+            .select("vec")
+            .collect()
+        )
+        if not seed_rows:
+            raise ValueError("ivfpq: empty corpus")
+        init = _mat(r["vec"] for r in seed_rows)
+        cents = kmeans_distributed(
+            unit, k=len(init), id_col=id_col, vec_col=vec_col,
+            iters=3, init=init, prepared=e,
+        )
+    finally:
+        e.unpersist()
+    assigned = _ivfpq_assign_resid(corpus, cents, id_col, vec_col).persist(
+        StorageLevel.DISK_ONLY
+    )
+    try:
+        books = pq_codebooks_distributed(
+            corpus, m, ksub, id_col=id_col, vec_col=vec_col,
+            coarse_cents=cents, iters=3, prepared_resid=assigned,
+        )
+    except Exception:
+        assigned.unpersist()
+        raise
+    return cents, books, assigned
 
 
 def _ivfpq_assign_resid(
@@ -2256,53 +1883,38 @@ def _ivfpq_assign_resid(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """One Arrow pass shared by the IVFPQ codebook fit and the encode
-    step: ``(id, cell, resid)`` — the L2-normalized vector's nearest
-    coarse cell (row-local argmin, split-invariant) and its FLOAT64
-    residual ``v/||v|| - centroid[cell]``.
+    """``(id, cell, resid)`` in one Arrow pass: each L2-normalized
+    vector's nearest coarse cell (row-local argmin, split-invariant) and
+    its FLOAT64 residual ``v/||v|| - centroid[cell]`` (:func:`_resid`;
+    ``cents=None`` is plain PQ's one zero centroid).
 
-    Exists because the distributed fit and the encode otherwise each
-    re-scan the raw corpus to recompute EXACTLY this (normalize →
-    assign → subtract): at index-build scale that is a redundant full
-    pass over the corpus (guide §8: materialize a scan's output once
-    and reuse it).  The residual is kept in float64 — not fixed point
-    — so the codebook fit's ``np.rint(resid * scale)`` quantization
-    and the encode's code argmins both see bit-identical inputs to
-    what their own passes computed (pinned in
-    tests/test_ivfpq_shared_assign.py).  The caller persists
-    (DISK_ONLY — the frame is corpus-sized, d doubles/row) and owns
-    the unpersist."""
+    The pass the IVFPQ codebook fit and the encode share, so a build
+    scans the raw corpus for it once (guide §8).  The residual stays
+    float64, not fixed point, so the fit's ``np.rint(resid * scale)``
+    and the encode's code argmins see bit-identical inputs to what their
+    own passes would compute (pinned in tests/test_ivfpq_shared_assign.py).
+    The caller persists it (DISK_ONLY — corpus-sized, d doubles a row)
+    and owns the unpersist."""
     import pandas as pd
-    from pyspark.sql import types as T
 
-    cents = np.asarray(cents, dtype=np.float64)
-    c_sq = (cents**2).sum(axis=1)
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("cell", T.IntegerType()),
-            T.StructField("resid", T.ArrayType(T.DoubleType())),
-        ]
-    )
+    cents = None if cents is None else np.asarray(cents, dtype=np.float64)
 
     def assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            n_ = np.linalg.norm(V, axis=1)
-            V = V / np.where(n_ == 0, 1.0, n_)[:, None]
-            cell = (-2.0 * (V @ cents.T) + c_sq[None, :]).argmin(axis=1)
-            R_ = V - cents[cell]
+            cell, R = _resid(_mat(pdf[vec_col]), cents)
             yield pd.DataFrame(
                 {
                     "id": pdf[id_col].astype("int64"),
                     "cell": cell.astype(np.int32),
-                    "resid": list(R_),
+                    "resid": list(R),
                 }
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(assign, schema)
+    return corpus.select(id_col, vec_col).mapInPandas(
+        assign, "id long, cell int, resid array<double>"
+    )
 
 
 def _ivfpq_encode(
@@ -2315,72 +1927,43 @@ def _ivfpq_encode(
 ) -> DataFrame:
     """One Arrow pass: ``(cell, neighbor_id, codes)`` — each vector
     assigned to its nearest coarse cell, its residual quantized to m
-    codes (row-local argmins: split-invariant).
+    codes (row-local argmins, ties to the lowest code: split-invariant).
 
-    ``assigned`` (an :func:`_ivfpq_assign_resid` frame) skips the
-    normalize+assign recompute and codes the stored residuals instead
-    of re-scanning the raw corpus — bit-identical output (same float64
-    residuals, same argmins; pinned), one fewer corpus pass."""
+    ``assigned`` (an :func:`_ivfpq_assign_resid` frame) codes the stored
+    residuals instead of re-scanning the raw corpus — bit-identical
+    output (same float64 residuals, same argmins; pinned), one fewer
+    corpus pass."""
     import pandas as pd
-    from pyspark.sql import types as T
 
     m, _, dsub = books.shape
-    c_sq = (cents**2).sum(axis=1)
-    b_sq = (books**2).sum(axis=2)
-    code_schema = T.StructType(
-        [
-            T.StructField("cell", T.IntegerType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
-
-    def _codes(R_: np.ndarray) -> np.ndarray:
-        codes = np.empty((len(R_), m), dtype=np.int32)
-        for j in range(m):
-            sub = R_[:, j * dsub : (j + 1) * dsub]
-            codes[:, j] = (
-                -2.0 * (sub @ books[j].T) + b_sq[j][None, :]
-            ).argmin(axis=1)
-        return codes
-
-    if assigned is not None:
-
-        def encode_assigned(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                R_ = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["resid"]]
-                )
-                yield pd.DataFrame(
-                    {
-                        "cell": pdf["cell"].astype("int32"),
-                        "neighbor_id": pdf["id"].astype("int64"),
-                        "codes": list(_codes(R_)),
-                    }
-                )
-
-        return assigned.mapInPandas(encode_assigned, code_schema)
+    stored = assigned is not None
 
     def encode(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            n_ = np.linalg.norm(V, axis=1)
-            V = V / np.where(n_ == 0, 1.0, n_)[:, None]
-            cell = (-2.0 * (V @ cents.T) + c_sq[None, :]).argmin(axis=1)
-            R_ = V - cents[cell]
+            if stored:
+                cell, R, ids = pdf["cell"].to_numpy(), _mat(pdf["resid"]), pdf["id"]
+            else:
+                cell, R = _resid(_mat(pdf[vec_col]), cents)
+                ids = pdf[id_col]
+            codes = np.stack(
+                [
+                    _l2_rank(R[:, j * dsub : (j + 1) * dsub], books[j]).argmin(axis=1)
+                    for j in range(m)
+                ],
+                axis=1,
+            )
             yield pd.DataFrame(
                 {
                     "cell": cell.astype(np.int32),
-                    "neighbor_id": pdf[id_col].astype("int64"),
-                    "codes": list(_codes(R_)),
+                    "neighbor_id": ids.astype("int64"),
+                    "codes": list(codes.astype(np.int32)),
                 }
             )
 
-    return corpus.mapInPandas(encode, code_schema)
+    src = assigned if stored else corpus.select(id_col, vec_col)
+    return src.mapInPandas(encode, "cell int, neighbor_id long, codes array<int>")
 
 
 def _ivfpq_probe(
@@ -2391,31 +1974,51 @@ def _ivfpq_probe(
     queries: DataFrame,
     k: int,
     nprobe: int,
-    shortlist: int,
+    shortlist: int | str,
     id_col: str,
     vec_col: str,
     exclude_self: bool,
     cell_filter: bool = False,
 ) -> DataFrame:
-    """ADC-scan the probed cells' code rows (map-side per-batch top-R)
-    and refine the per-query shortlist with the exact cosine against
+    """The one ADC probe: ADC-scan the probed cells' code rows and
+    refine each query's shortlist with the exact cosine against
     ``corpus`` (the raw-vector store — PQ indexes deliberately do not
     hold raw vectors).  ``cell_filter=True`` pushes a ``cell IN
     (probed)`` predicate into the coded scan — on a cell-bucketed
-    index table that enables bucket pruning."""
-    import pandas as pd
-    from pyspark.sql import types as T
+    index table that enables bucket pruning.
 
+    Per (query, probed cell) a tiny ``m x ksub`` table of partial
+    squared distances to the query's residual is built driver-side
+    (queries are a bounded set — the scalar-broadcast pattern); scoring
+    is table-gather adds over the codes (a fixed-order m-term float64
+    sum), and each Arrow batch emits only its local top-``shortlist``
+    per query, so shuffle rows are O(batches * queries * shortlist),
+    never corpus-sized.  Every selection — batch top-R, global top-R,
+    final top-k — orders by (score, neighbor_id), a total order, so the
+    result is identical under any batch or partition split (a global
+    top-R over per-batch top-Rs equals the top-R over all rows)."""
+    import pandas as pd
+
+    if shortlist == "auto":
+        # corpus-size-INDEPENDENT refine bound (r6 verdict item 4 — a
+        # 5%-of-corpus policy made the exact-rerank stage linear in the
+        # corpus and cost an extra count() job): the ADC rank
+        # displacement is bounded by how many candidates can sit within
+        # the quantization-error band around the k-th true distance,
+        # which shrinks with m; 64*k (= 4*k*ksub at the ksub=16 default)
+        # covers the worst displacement observed on structure-free noise
+        # at every tested scale (sf0.01/0.1/1: exact-top-20 members never
+        # ranked past ~200 by ADC).  The recall pins in
+        # tests/test_extensions.py and the registered summary oracles
+        # gate this bound at every SF.
+        shortlist = max(100, 64 * k)
     m, _, dsub = books.shape
-    c_sq = (cents**2).sum(axis=1)
     q_rows = queries.select(id_col, vec_col).collect()
     if not q_rows:
         raise ValueError("ivfpq: empty queries")
     q_ids = np.array([int(r[0]) for r in q_rows], dtype=np.int64)
-    Q = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    qn = np.linalg.norm(Q, axis=1)
-    Q = Q / np.where(qn == 0, 1.0, qn)[:, None]
-    qcells = np.argsort(-2.0 * (Q @ cents.T) + c_sq[None, :], axis=1)[:, :nprobe]
+    Q = _unit(_mat(r[1] for r in q_rows))
+    qcells = np.argsort(_l2_rank(Q, cents), axis=1)[:, :nprobe]
     tabmap = {}
     probes: dict[int, list[int]] = {}
     for qi in range(len(Q)):
@@ -2434,13 +2037,6 @@ def _ivfpq_probe(
             F.col("cell").isin([int(c) for c in probes])
         )
 
-    adc_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("adc", T.DoubleType()),
-        ]
-    )
     R_cap = int(shortlist)
     excl = exclude_self
 
@@ -2474,7 +2070,9 @@ def _ivfpq_probe(
                 }
             )
 
-    cand = coded.mapInPandas(adc_scan, adc_schema)
+    cand = coded.mapInPandas(
+        adc_scan, "query_id long, neighbor_id long, adc double"
+    )
     w_r = Window.partitionBy("query_id").orderBy(
         F.col("adc").asc(), F.col("neighbor_id").asc()
     )
@@ -2561,19 +2159,12 @@ def cosine_topk_ivfpq(
 
     Output: ``(query_id, rk, neighbor_id)``.
     """
-    if shortlist == "auto":
-        # corpus-size-independent refine bound (see pq_topk: ADC rank
-        # displacement is quantization-error-bounded, and here the
-        # probed-cell pruning already caps candidates at
-        # ~nprobe/n_centroids of the corpus); no count() job
-        shortlist = max(100, 64 * k)
     if quantizers is not None:
         cents = np.asarray(quantizers[0], dtype=np.float64)
         books = np.asarray(quantizers[1], dtype=np.float64)
         if (
             books.ndim != 3
-            or books.shape[0] != m
-            or books.shape[1] != ksub
+            or books.shape[:2] != (m, ksub)
             or cents.ndim != 2
             or cents.shape[1] != m * books.shape[2]
         ):
@@ -2582,6 +2173,7 @@ def cosine_topk_ivfpq(
                 f"{cents.shape}/{books.shape} do not match "
                 f"(m={m}, ksub={ksub})"
             )
+        assigned = None
     else:
         # mirror write_ivfpq_index (ADVICE r10): the distributed fit
         # already persisted the corpus-sized (id, cell, resid) pass —
@@ -2591,26 +2183,22 @@ def cosine_topk_ivfpq(
             corpus, n_centroids, m, ksub, sample_size, id_col, vec_col,
             codebook_fit=codebook_fit, return_assigned=True,
         )
-        if assigned is not None:
-            try:
-                # the probe result is lazy, so the assigned frame can't
-                # stay persisted until the caller's action: materialize
-                # the (m bytes/vector) codes eagerly — one read of the
-                # already-persisted residual blocks, one small write —
-                # and release the float64 residuals now
-                coded = _ivfpq_encode(
-                    corpus, cents, books, id_col, vec_col,
-                    assigned=assigned,
-                ).localCheckpoint(eager=True)
-            finally:
-                assigned.unpersist()
-            return _ivfpq_probe(
-                coded, cents, books, corpus, queries, k, nprobe,
-                int(shortlist), id_col, vec_col, exclude_self,
-            )
-    coded = _ivfpq_encode(corpus, cents, books, id_col, vec_col)
+    if assigned is None:
+        coded = _ivfpq_encode(corpus, cents, books, id_col, vec_col)
+    else:
+        try:
+            # the probe result is lazy, so the assigned frame can't stay
+            # persisted until the caller's action: materialize the
+            # (m bytes/vector) codes eagerly — one read of the
+            # already-persisted residual blocks, one small write — and
+            # release the float64 residuals now
+            coded = _ivfpq_encode(
+                corpus, cents, books, id_col, vec_col, assigned=assigned
+            ).localCheckpoint(eager=True)
+        finally:
+            assigned.unpersist()
     return _ivfpq_probe(
-        coded, cents, books, corpus, queries, k, nprobe, int(shortlist),
+        coded, cents, books, corpus, queries, k, nprobe, shortlist,
         id_col, vec_col, exclude_self,
     )
 
@@ -2664,15 +2252,17 @@ def write_ivfpq_index(
             "fresh build fits fresh quantizers; append daily arrivals "
             "with append_ivfpq_index instead"
         )
-    reset_tables(
-        spark,
-        f"{name}_codes", f"{name}_centroids", f"{name}_books", f"{name}_meta",
-    )
+    # fit first: a bad fit mode or an empty corpus raises before the
+    # standing index is dropped
     cents, books, assigned = _ivfpq_fit(
         corpus, n_centroids, m, ksub, sample_size, id_col, vec_col,
         codebook_fit=codebook_fit, return_assigned=True,
     )
     try:
+        reset_tables(
+            spark,
+            f"{name}_codes", f"{name}_centroids", f"{name}_books", f"{name}_meta",
+        )
         # the distributed fit hands back its (id, cell, resid) pass so
         # the encode codes the stored residuals instead of re-scanning
         # the corpus (bit-identical codes; sample fit returns None and
@@ -2760,14 +2350,9 @@ def cosine_topk_ivfpq_indexed(
     by the exact refinement join (shortlist-sized row set); the scan
     side touches only the cell-bucketed code rows, with the
     probed-cell predicate pushed into the scan for bucket pruning."""
-    spark = corpus.sparkSession
-    coded, cents, books, _meta = read_ivfpq_index(spark, name)
-    if shortlist == "auto":
-        # same corpus-size-independent bound as cosine_topk_ivfpq —
-        # keeps the indexed probe's plan free of a count() job
-        shortlist = max(100, 64 * k)
+    coded, cents, books, _meta = read_ivfpq_index(corpus.sparkSession, name)
     return _ivfpq_probe(
-        coded, cents, books, corpus, queries, k, nprobe, int(shortlist),
+        coded, cents, books, corpus, queries, k, nprobe, shortlist,
         id_col, vec_col, exclude_self, cell_filter=True,
     )
 

@@ -657,7 +657,8 @@ WITH v AS (
 )
 SELECT CAST(dim AS BIGINT) AS dim,
        CAST(COUNT(DISTINCT qv) AS BIGINT) AS n_levels,
-       MIN(qv) AS q_min, MAX(qv) AS q_max, SUM(qv) AS q_sum
+       MIN(qv) AS q_min, MAX(qv) AS q_max,
+       CAST(SUM(qv) AS BIGINT) AS q_sum
 FROM q GROUP BY dim
 """
 

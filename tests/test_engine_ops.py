@@ -786,6 +786,58 @@ def test_ivf_indexed_matches_inmemory(spark):
             spark.sql(f"DROP TABLE IF EXISTS {name}{suffix}")
 
 
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+@pytest.mark.parametrize("bad", ["fit_mode", "empty_corpus"])
+def test_index_rebuild_fits_before_reset(spark, kind, bad):
+    """A rebuild whose fit fails (unknown fit mode, empty corpus) raises
+    before it drops anything: the standing index still opens and probes
+    to the same rows."""
+    from customer_360_etl_pipeline_on_azure_cloud_spark.operators import (
+        similarity as sim,
+    )
+    from customer_360_etl_pipeline_on_azure_cloud_spark.sources.tables import (
+        load_table,
+    )
+
+    emb = load_table(spark, SF_SMALL, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 4)
+    name = f"t_refit_{kind}_{bad}"
+    if kind == "ivf":
+        suffixes = ("_cells", "_centroids", "_meta")
+
+        def build(corpus, fit):
+            sim.write_ivf_index(corpus, name, n_centroids=4, num_buckets=2,
+                                centroid_fit=fit)
+
+        def probe():
+            idx = sim.read_ivf_index(spark, name)
+            return sim.cosine_topk_ivf_indexed(idx, queries, k=3, nprobe=2)
+    else:
+        suffixes = ("_codes", "_centroids", "_books", "_meta")
+
+        def build(corpus, fit):
+            sim.write_ivfpq_index(corpus, name, n_centroids=4, m=8, ksub=4,
+                                  num_buckets=2, codebook_fit=fit)
+
+        def probe():
+            return sim.cosine_topk_ivfpq_indexed(name, emb, queries, k=3,
+                                                 nprobe=2)
+
+    try:
+        build(emb, "sample")
+        before = sorted(tuple(r) for r in probe().collect())
+        assert before
+        corpus, fit = {
+            "fit_mode": (emb, "no_such_fit"),
+            "empty_corpus": (emb.filter(F.lit(False)), "distributed"),
+        }[bad]
+        with pytest.raises(ValueError, match="no_such_fit|empty corpus"):
+            build(corpus, fit)
+        assert sorted(tuple(r) for r in probe().collect()) == before
+    finally:
+        _drop_index_tables(spark, name, suffixes)
+
+
 # --- mergeable HLL sketch rollup ---------------------------------------------
 
 

@@ -12,6 +12,7 @@ import os
 
 import duckdb
 import pytest
+from pyspark.sql import types as T
 
 from conftest import REPO_ROOT, SF_SMALL
 
@@ -63,6 +64,19 @@ def test_query_matches_oracle(spark, name):
 
     assert sorted(spark_cols) == sorted(duck_cols), (
         f"{name}: column mismatch spark={spark_cols} duck={duck_cols}"
+    )
+    # the result type belongs to the comparison: DuckDB's SUM over BIGINT
+    # is HUGEINT, which reaches pandas as float64 and Arrow as decimal,
+    # while Spark returns a long for the same column
+    spark_types = {f.name: f.dataType for f in sdf.schema.fields}
+    wide = [
+        (c, str(t), spark_types[c].simpleString())
+        for c, t in zip(duck_cols, res.types)
+        if str(t).startswith(("HUGEINT", "UHUGEINT", "DECIMAL"))
+        and not isinstance(spark_types[c], T.DecimalType)
+    ]
+    assert not wide, (
+        f"{name}: oracle type wider than Spark's (col, duck, spark): {wide}"
     )
     assert len(spark_rows) == len(duck_rows), (
         f"{name}: rowcount spark={len(spark_rows)} duck={len(duck_rows)}"
