@@ -20,6 +20,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb  # noqa: E402
+from pyspark.sql import types as T  # noqa: E402
 
 import __spark_entry__ as entrymod  # noqa: E402
 from customer_360_etl_pipeline_on_azure_cloud_spark.session import get_spark  # noqa: E402
@@ -54,6 +55,23 @@ def multiset(cols, rows):
     )
 
 
+def wide_types(sdf, res) -> list[tuple[str, str, str]]:
+    """``(column, DuckDB type, Spark type)`` for each oracle column whose
+    type is wider than Spark's (the column names must already match).
+
+    The result type belongs to the comparison: DuckDB's SUM over BIGINT
+    is HUGEINT, which reaches pandas as float64 and Arrow as decimal,
+    while Spark returns a long for the same column — the Python ints
+    compared by :func:`multiset` would hide the difference."""
+    spark_types = {f.name: f.dataType for f in sdf.schema.fields}
+    return [
+        (c, str(t), spark_types[c].simpleString())
+        for c, t in zip(res.columns, res.types)
+        if str(t).startswith(("HUGEINT", "UHUGEINT", "DECIMAL"))
+        and not isinstance(spark_types[c], T.DecimalType)
+    ]
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(
@@ -70,6 +88,7 @@ def main() -> None:
         row = {
             "rows_match": False,
             "schema_match": False,
+            "types_match": False,
             "hash_match": False,
             "spark_rows": None,
             "oracle_rows": None,
@@ -93,7 +112,10 @@ def main() -> None:
             row["oracle_rows"] = len(d_rows)
             row["rows_match"] = len(s_rows) == len(d_rows)
             row["schema_match"] = sorted(s_cols) == sorted(d_cols)
-            row["hash_match"] = row["schema_match"] and multiset(
+            row["types_match"] = row["schema_match"] and not wide_types(
+                sdf, res
+            )
+            row["hash_match"] = row["types_match"] and multiset(
                 s_cols, s_rows
             ) == multiset(d_cols, d_rows)
         except Exception as exc:  # noqa: BLE001

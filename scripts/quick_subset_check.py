@@ -16,7 +16,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from correctness_full import duck_con, multiset  # noqa: E402
+from correctness_full import duck_con, multiset, wide_types  # noqa: E402
 from customer_360_etl_pipeline_on_azure_cloud_spark.session import get_spark  # noqa: E402
 
 
@@ -44,9 +44,11 @@ def main() -> None:
             res = con.sql(oracles[name])
             d_cols = list(res.columns)
             d_rows = [tuple(r) for r in res.fetchall()]
-            row["hash_match"] = sorted(s_cols) == sorted(d_cols) and multiset(
-                s_cols, s_rows
-            ) == multiset(d_cols, d_rows)
+            row["hash_match"] = (
+                sorted(s_cols) == sorted(d_cols)
+                and not wide_types(sdf, res)
+                and multiset(s_cols, s_rows) == multiset(d_cols, d_rows)
+            )
         out[name] = row
         print(json.dumps({name: row}), file=sys.stderr)
     print(json.dumps(out))

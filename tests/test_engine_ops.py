@@ -286,6 +286,53 @@ def test_minhash_index_append_keeps_one_meta_row(spark):
         _drop_index_tables(spark, name, ("_sig", "_bands", "_meta"))
 
 
+@pytest.mark.parametrize("num_hashes,bands", [(30, 8), (32, 0)])
+@pytest.mark.parametrize(
+    "op", ["minhash_lsh_pairs", "write_minhash_index", "minhash_lsh_join"]
+)
+def test_minhash_band_count_checked_before_side_effects(
+    spark, op, num_hashes, bands
+):
+    """``bands`` must split the signature evenly: a bad count raises
+    ValueError before any persist, reset or write (not an assert, which
+    ``python -O`` strips, leaving bands that silently drop the trailing
+    hashes).  A rebuild with a bad count leaves the standing index
+    opening and probing to the same rows."""
+    from customer_360_etl_pipeline_on_azure_cloud_spark.operators.dedup import (
+        minhash_index,
+        minhash_lsh_join,
+        minhash_lsh_pairs,
+        read_minhash_index,
+        write_minhash_index,
+    )
+
+    corpus, _, batch = _mh_index_split(spark)
+    bad = {"num_hashes": num_hashes, "bands": bands}
+    if op == "minhash_lsh_pairs":
+        with pytest.raises(ValueError, match="bands="):
+            minhash_lsh_pairs(corpus, exact=True, **bad)
+        return
+    if op == "minhash_lsh_join":
+        with pytest.raises(ValueError, match="bands="):
+            minhash_lsh_join(batch, minhash_index(corpus), **bad)
+        return
+    name = "t_mh_band_count"
+
+    def probe():
+        idx = read_minhash_index(spark, name)
+        return sorted(tuple(r) for r in minhash_lsh_join(batch, idx).collect())
+
+    try:
+        write_minhash_index(corpus, name, num_buckets=4)
+        before = probe()
+        assert before
+        with pytest.raises(ValueError, match="bands="):
+            write_minhash_index(corpus, name, num_buckets=4, **bad)
+        assert probe() == before
+    finally:
+        _drop_index_tables(spark, name, ("_sig", "_bands", "_meta"))
+
+
 @pytest.mark.parametrize("crash_at", ["rename_out", "rename_in"])
 def test_compaction_crash_is_recoverable(spark, monkeypatch, crash_at):
     """A compaction that dies after ``{table}__compact`` is written

@@ -305,16 +305,28 @@ def test_jaccard_uncapped_warns_capped_and_exact_do_not(spark):
         jaccard_pairs(docs, n=3, threshold_pct=30, max_df=100)
 
 
-def test_jaccard_max_df_plan_has_broadcast_anti_join(docs):
+@pytest.mark.parametrize("cap", ["jaccard", "minhash_join"])
+def test_jaccard_max_df_plan_has_broadcast_anti_join(docs, cap):
     """Pin the scale shape: the stop-shingle filter must be a BROADCAST
     left-anti join (map-side probe), not a shuffled join of the full
     shingle table against the hot list. Uses the un-finalized plan
-    builder because finalize()'s localCheckpoint hides the lineage."""
+    builder because finalize()'s localCheckpoint hides the lineage.
+    The probe's ``max_bucket`` cap is the same hot-key cap and must
+    take the same form."""
     from customer_360_etl_pipeline_on_azure_cloud_spark.operators.dedup import (
         _jaccard_pairs_plan,
+        _minhash_lsh_join_plan,
+        minhash_index,
     )
 
-    out, sh_all = _jaccard_pairs_plan(docs, "doc_id", "text", 3, 30, 10**9)
+    if cap == "jaccard":
+        out, sh_all = _jaccard_pairs_plan(docs, "doc_id", "text", 3, 30, 10**9)
+    else:
+        idx = minhash_index(docs.filter(F.col("doc_id") % 5 != 0))
+        out, sh_all = _minhash_lsh_join_plan(
+            docs.filter(F.col("doc_id") % 5 == 0), idx, "doc_id", "text",
+            32, 8, 3, 30, False, max_bucket=10**9,
+        )
     try:
         plan = out._jdf.queryExecution().executedPlan().toString()
     finally:
