@@ -12,6 +12,8 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalar import _col
+
 
 def distinct_count(
     df: DataFrame,
@@ -55,7 +57,7 @@ def sum_pivot(
     pivoting is subsumed.
     """
     keys = list(keys)
-    value_col = F.col(value_col) if isinstance(value_col, str) else value_col
+    value_col = _col(value_col)
     out = (
         df.groupBy(*keys)
         .pivot(pivot_col, list(pivot_values))
@@ -81,7 +83,7 @@ def quantile_agg(
     """The one-row quantile aggregate behind :func:`quantile_cutoffs`,
     exposed unexecuted so plan tests can pin that the default path is
     ``percentile_approx`` (mergeable sketch), not exact ``percentile``."""
-    col = F.col(col) if isinstance(col, str) else col
+    col = _col(col)
     probs_arr = F.array(*[F.lit(p) for p in probs])
     if exact:
         agg = F.percentile(col, probs_arr)
@@ -255,7 +257,7 @@ def histogram_sketch(
             "bin edges are exact integers (histogram_quantiles derives "
             "bin_lo/bin_hi from the integer width)"
         )
-    v = F.col(value_col) if isinstance(value_col, str) else value_col
+    v = _col(value_col)
     width = (hi - lo) // nbins
     diff = (v - F.lit(lo)).cast("long")
     return (

@@ -7,8 +7,9 @@ token streams with that rule merged → repeat.  This is the core of
 byte-pair-encoding tokenizer training (Sennrich et al. 2016) expressed
 in Spark's execution model:
 
-* pair counting is an in-row ``zip_with`` + one hash aggregate
-  (map-side combined — the shuffle carries observed-pair partials);
+* pair counting is the in-row adjacent-pair array of
+  ``text._pairs`` + one hash aggregate (map-side combined — the
+  shuffle carries observed-pair partials);
 * the argmax is ``orderBy().limit(1)`` = TakeOrderedAndProject, and the
   single winning row is the round's only driver traffic (the same
   bounded scalar-broadcast pattern as quantile_cutoffs);
@@ -16,10 +17,13 @@ in Spark's execution model:
   match-with-previous semantics — NO lookahead state, so the identical
   fold replays on any engine with a list-reduce primitive (the DuckDB
   oracle does exactly that);
-* each round persists the rewritten token table and releases the
-  previous one — K rounds touch the corpus K+1 times, which is the
-  honest cost of exact BPE (production trainers batch several
-  non-interacting merges per pass; same plan shape).
+* each round but the last persists the rewritten token table and
+  releases the previous one — K rounds tokenize the corpus once and
+  rewrite it K-1 times, the honest cost of exact BPE (production
+  trainers batch several non-interacting merges per pass; same plan
+  shape).  The ``persist`` + ``count`` is the rewrite's
+  materialization, not a decision: the round's decision is the
+  one-row argmax.
 
 Greedy non-overlap pinned by the fold: merging (a,a) over [a,a,a]
 yields [a+a, a] — the merged symbol does not re-participate within its
@@ -32,6 +36,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .text import _pairs, tokens
+from .util import spread
 
 
 def merge_pair(
@@ -58,17 +65,10 @@ def merge_pair(
 
 def array_pair_counts(toks_df: DataFrame, toks_col: str = "t") -> DataFrame:
     """Adjacent-pair counts over a token-array column (the array-typed
-    sibling of text.adjacent_pairs): in-row zip_with, one explode, one
-    map-side-combined aggregate."""
-    t = F.col(toks_col)
-    n = F.size(t)
-    pairs = F.zip_with(
-        F.slice(t, 1, n - F.lit(1)),
-        F.slice(t, 2, n - F.lit(1)),
-        lambda l, r: F.struct(l.alias("left_tok"), r.alias("right_tok")),
-    )
+    sibling of text.adjacent_pairs): the in-row pair array, one
+    explode, one map-side-combined aggregate."""
     return (
-        toks_df.select(F.explode(pairs).alias("p"))
+        toks_df.select(F.explode(_pairs(F.col(toks_col))).alias("p"))
         .select("p.left_tok", "p.right_tok")
         .groupBy("left_tok", "right_tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -90,11 +90,9 @@ def bpe_train(
     (cnt desc, left asc, right asc), so training is deterministic.
 
     The loop stops early when the best remaining pair falls under
-    ``min_count`` (merging hapax pairs is noise).
+    ``min_count`` (merging hapax pairs is noise).  The last round only
+    counts: no later round reads its rewrite.
     """
-    from .text import tokens
-    from .util import spread
-
     spark = df.sparkSession
     cur = spread(df).select(tokens(text_col).alias("t")).persist()
     merges: list[tuple[int, str, str, int]] = []
@@ -110,6 +108,8 @@ def bpe_train(
                 break
             l, r, c = top[0]["left_tok"], top[0]["right_tok"], top[0]["cnt"]
             merges.append((k, l, r, c))
+            if k == n_merges:
+                break
             nxt = cur.select(merge_pair(F.col("t"), l, r, sep).alias("t")).persist()
             nxt.count()  # materialize before dropping the parent
             cur.unpersist()

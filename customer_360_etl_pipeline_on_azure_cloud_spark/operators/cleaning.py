@@ -7,6 +7,8 @@ from collections.abc import Iterable, Mapping
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalar import _col
+
 
 def drop_sentinels(df: DataFrame, sentinels: Mapping[str, object]) -> DataFrame:
     """Drop rows where a column equals its invalid-sentinel value.
@@ -35,7 +37,7 @@ def dedup_deterministic(
     handled by AQE skew-join/partition splitting.
     """
     keys = list(keys)
-    order = [F.col(c) if isinstance(c, str) else c for c in order_by]
+    order = [_col(c) for c in order_by]
     w = Window.partitionBy(*keys).orderBy(*order)
     return (
         df.withColumn("__rn", F.row_number().over(w))

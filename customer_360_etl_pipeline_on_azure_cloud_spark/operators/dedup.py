@@ -68,6 +68,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.scalar import _col
 from .index import (
     append_rows,
     compact_tables,
@@ -105,7 +106,7 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a text column (1-based element_at
     so the construction matches SQL oracles literally). Empty array when
     the text has fewer than n tokens."""
-    text = F.col(text) if isinstance(text, str) else text
+    text = _col(text)
     toks = F.split(F.trim(text), " ")
     # NB: Spark's sequence(1, 0) DESCENDS instead of being empty, so the
     # short-text case must be guarded explicitly.

@@ -12,13 +12,13 @@ min-id doc per component).
 Rounds and convergence — the contract of every iterative operator in
 this module; the per-function docstrings point here:
 
-* **A round is one checkpoint job.**  :func:`_materialize` checkpoints
-  a round's state with ``localCheckpoint(eager=True)`` and attaches an
-  ``Observation``, so the one scalar the driver needs next (labels
-  changed, edges rewired, vertices below ``k``, frontier or vertex
-  count) is computed by the checkpoint's own job.  No count, join or
-  ``exceptAll`` follows a checkpoint to decide whether to go on, and
-  only that scalar reaches the driver, never data.  The checkpoint
+* **A round is one checkpoint job.**  :func:`util.materialize`
+  checkpoints a round's state with ``localCheckpoint(eager=True)`` and
+  observes a metric on it, so the one scalar the driver needs next
+  (labels changed, edges rewired, vertices below ``k``, frontier or
+  vertex count) is computed by the checkpoint's own job.  No count,
+  join or ``exceptAll`` follows a checkpoint to decide whether to go
+  on, and only that scalar reaches the driver, never data.  The checkpoint
   truncates lineage, so plans stay O(1) across rounds.
 * **``max_iter`` is a budget.**  The fixpoint loops
   (:func:`connected_components` with either algorithm, :func:`k_core`)
@@ -47,27 +47,12 @@ from __future__ import annotations
 from contextlib import contextmanager
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .index import append_rows, open_table, reset_tables
 from .skew import write_bucketed
-
-
-def _materialize(
-    df: DataFrame, metric: Column, *drop: str
-) -> tuple[DataFrame, int]:
-    """One round's state: ``df`` checkpointed eagerly, with ``metric``
-    (an aggregate over ``df``'s rows) observed by the checkpoint's own
-    job.  Columns named in ``drop`` feed only the metric and are left
-    out of the checkpoint."""
-    obs = Observation()
-    cp = (
-        df.observe(obs, metric.alias("m"))
-        .drop(*drop)
-        .localCheckpoint(eager=True)
-    )
-    return cp, obs.get["m"]
+from .util import materialize
 
 
 def _fixpoint(op, step, state, pending: int, max_iter: int, what: str):
@@ -180,7 +165,7 @@ def connected_components(
         verts.distinct().select("id", F.col("id").alias("component"))
         .localCheckpoint(eager=True)
     )
-    sym, pending = _materialize(
+    sym, pending = materialize(
         sym.distinct(), F.count_if(F.col("u") != F.col("v"))
     )
 
@@ -190,7 +175,7 @@ def connected_components(
         msgs = sym.join(labels, sym["u"] == labels["id"]).select(
             F.col("v").alias("id"), "component", F.lit(None).alias("old")
         )
-        return _materialize(
+        return materialize(
             labels.withColumn("old", F.col("component"))
             .union(msgs)
             .groupBy("id")
@@ -238,7 +223,7 @@ def _two_phase_components(
     """
 
     def edge_set(rows: DataFrame) -> tuple[DataFrame, int]:
-        return _materialize(
+        return materialize(
             rows.filter(F.col("u") != F.col("v"))
             .groupBy("u", "v")
             .agg(F.max("moved").alias("moved")),
@@ -284,7 +269,7 @@ def _two_phase_components(
         )
         return small, moved_large + moved_small
 
-    edges, pending = _materialize(
+    edges, pending = materialize(
         sym.filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
@@ -586,7 +571,7 @@ def k_core(
     )
 
     def degrees(edges: DataFrame) -> tuple[DataFrame, int]:
-        return _materialize(
+        return materialize(
             edges.groupBy("u").agg(F.count(F.lit(1)).alias("core_degree")),
             F.count_if(F.col("core_degree") < k),
         )
@@ -747,7 +732,7 @@ def bfs_hops(
         # would otherwise re-run every round, so it checkpoints even
         # on the materialized path
         sym = sym.localCheckpoint(eager=True)
-    frontier, n_frontier = _materialize(
+    frontier, n_frontier = materialize(
         seeds.select(F.col(seeds.columns[0]).alias("id")).distinct(),
         F.count(F.lit(1)),
     )
@@ -768,7 +753,7 @@ def bfs_hops(
                 nxt = cand.join(F.broadcast(seen), "id", "left_anti")
             else:
                 nxt = cand.join(seen.hint("shuffle_hash"), "id", "left_anti")
-            frontier, n_frontier = _materialize(nxt, F.count(F.lit(1)))
+            frontier, n_frontier = materialize(nxt, F.count(F.lit(1)))
             visited = visited.unionByName(
                 frontier.withColumn("hops", F.lit(h))
             )
@@ -816,7 +801,7 @@ def min_cost_bounded(
     )
     if not materialized:
         e = e.localCheckpoint(eager=True)
-    dist, n_dist = _materialize(
+    dist, n_dist = materialize(
         seeds.select(F.col(seeds.columns[0]).alias("id"))
         .distinct()
         .withColumn("cost", F.lit(0).cast("long")),
@@ -828,7 +813,7 @@ def min_cost_bounded(
                 F.col("v").alias("id"),
                 (F.col("cost") + F.col("w")).alias("cost"),
             )
-            dist, n_dist = _materialize(
+            dist, n_dist = materialize(
                 dist.unionByName(relaxed)
                 .groupBy("id")
                 .agg(F.min("cost").alias("cost")),
@@ -957,7 +942,7 @@ def _pagerank_rounds(
     """The :func:`pagerank_weighted` recurrence over edges ``(u, v, w)``.
     The returned ranks are a checkpoint, so the caller may release
     ``e`` as soon as this returns."""
-    verts, n = _materialize(
+    verts, n = materialize(
         e.select(F.explode(F.array("u", "v")).alias("id")).distinct(),
         F.count(F.lit(1)),
     )

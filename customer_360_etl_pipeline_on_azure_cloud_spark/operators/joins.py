@@ -12,6 +12,8 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalar import _col
+
 
 def lookup(
     df: DataFrame,
@@ -31,7 +33,7 @@ def lookup(
     a kilobyte-scale dim; AQE would usually catch it, but the hint makes
     the plan deterministic). ``alias`` renames the single value column.
     """
-    key_col = F.col(key) if isinstance(key, str) else key
+    key_col = _col(key)
     value_cols = list(value_cols)
     dim_proj = dim.select(
         F.col(dim_key).alias("__lk"), *[F.col(c) for c in value_cols]
@@ -303,8 +305,8 @@ def positional_zip(
     """
     from pyspark.sql import Window
 
-    lo = [F.col(c) if isinstance(c, str) else c for c in left_order]
-    ro = [F.col(c) if isinstance(c, str) else c for c in right_order]
+    lo = [_col(c) for c in left_order]
+    ro = [_col(c) for c in right_order]
     idx = index_name if keep_index else "__idx"
     lw = left.withColumn(idx, F.row_number().over(Window.orderBy(*lo)).cast("long"))
     rw = right.withColumn(idx, F.row_number().over(Window.orderBy(*ro)).cast("long"))

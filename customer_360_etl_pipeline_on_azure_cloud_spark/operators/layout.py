@@ -19,6 +19,8 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalar import _col
+
 
 def zorder_key(cols: Iterable[Column | str], bits: int = 8) -> Column:
     """Morton-interleave the low ``bits`` bits of each column into one
@@ -30,7 +32,7 @@ def zorder_key(cols: Iterable[Column | str], bits: int = 8) -> Column:
     constant-folded and codegen'd by Catalyst; at 8 bits x 2 cols the
     whole key is ~32 JVM ops per row, no shuffle, no Python.
     """
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
+    cs = [_col(c) for c in cols]
     n = len(cs)
     if n == 0:
         raise ValueError("zorder_key: need at least one column")
@@ -226,8 +228,8 @@ def hilbert_key(x: Column | str, y: Column | str, bits: int = 8) -> Column:
     """
     if bits < 1 or 2 * bits > 62:
         raise ValueError(f"hilbert_key: bits={bits} out of range")
-    xc = (F.col(x) if isinstance(x, str) else x).cast("long")
-    yc = (F.col(y) if isinstance(y, str) else y).cast("long")
+    xc = _col(x).cast("long")
+    yc = _col(y).cast("long")
     digit_arr = F.array(*[F.lit(v) for v in HILBERT_DIGIT])
     next_arr = F.array(*[F.lit(v) for v in HILBERT_NEXT])
     state: Column = F.lit(0)

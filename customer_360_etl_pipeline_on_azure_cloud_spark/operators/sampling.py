@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.scalar import _col
+
 #: hex characters of the md5 digest used for gating; 8 hex = 32 bits of
 #: resolution, i.e. rate granularity ~2.3e-10 — ample for any mix ratio.
 _NHEX = 8
@@ -156,7 +158,7 @@ def weighted_sample(
     tree on both engines before the single floor. Same key, same weight
     -> same fate on any layout; still monotone in ``base_rate``.
     """
-    w = F.col(weight_col) if isinstance(weight_col, str) else weight_col
+    w = _col(weight_col)
     p = F.least(F.lit(1.0), F.lit(float(base_rate)) * w.cast("double"))
     thresh = F.floor(p * F.lit(float(16**nhex))).cast("long")
     gate_int = F.conv(_gate(F.col(key_col), salt, nhex), 16, 10).cast("long")

@@ -1,19 +1,47 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-All hot-path expressions are built-in column functions (JVM-side,
-whole-stage codegen); nothing here drops to Python per row. Designed for
-the `documents` table shape (doc_id, text, lang, source, n_chars) but
-parameterized on column names.
+Designed for the `documents` table shape (doc_id, text, lang, source,
+n_chars) but parameterized on column names.  Scale notes: every
+operator is a narrow map (no shuffle) except the aggregating ones,
+which use partial aggregation. At 100 TB, text ops are scan-bound —
+keeping them codegen-friendly is the entire game.
 
-Scale notes: every operator is a narrow map (no shuffle) except the
-aggregating ones, which use partial aggregation. At 100 TB, text ops are
-scan-bound — keeping them codegen-friendly is the entire game.
+Corpus statistics — the contract of every operator in this module; the
+per-function docstrings point here:
+
+* **Built-in column expressions only.**  Tokenizing, hashing, counting
+  and scoring are JVM-side column functions (whole-stage codegen or
+  array higher-order functions); nothing drops to Python per row.
+* **Counts are integer-exact.**  Token, pair, class and bucket counts
+  are BIGINT aggregates, and rule flags compare them by
+  cross-multiplication, so any engine replays them exactly.
+* **Doubles fold in pinned order.**  A per-group double sum is
+  :func:`_ordered_sum`: ``array_sort`` over ``(key, value)`` structs,
+  then a left fold from 0.0 — DuckDB's
+  ``list_reduce(list(value ORDER BY key))`` adds the same terms in the
+  same order, so the sum is deterministic under any partitioning.
+  Each term is one fixed IEEE tree (:func:`_bm25` for BM25).
+* **Hashing is md5.**  :func:`hashed_feature` takes the first 8 hex
+  chars of ``md5(token)`` — the same bucket in every engine, where
+  ``xxhash64``/``hash`` are Spark-specific.
+* **ln-derived doubles stay internal.**  ``ln`` is not bit-portable
+  (the JVM's fdlibm and glibc differ by 1 ulp on many integer inputs,
+  ln(3) among them — measured), so a double that goes through ``ln``
+  (nll, PMI, KL, DSIR) is only a sort key: what crosses to an oracle is
+  the BIGINT rank over it.  BM25 uses the rational RSJ idf (IEEE
+  +,-,*,/ only), so its scores are bit-identical across engines.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from functools import reduce
+
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.scalar import _col
+from .util import finalize, materialize, spread
 
 #: Tiny in-expression stopword lists for the language-ID heuristic.
 #: Deliberately small: the heuristic is a cheap n-gram/stopword vote,
@@ -28,8 +56,7 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 
 def tokens(text: Column | str, pattern: str = r"\s+") -> Column:
     """Whitespace tokenization as an array column."""
-    text = F.col(text) if isinstance(text, str) else text
-    return F.split(F.trim(text), pattern)
+    return F.split(F.trim(_col(text)), pattern)
 
 
 def token_count(text: Column | str) -> Column:
@@ -40,9 +67,8 @@ def bpe_ish_token_count(text: Column | str) -> Column:
     """Subword-ish token estimate: count word pieces AND punctuation
     runs with a BPE-flavored regex — cheap proxy for tokenizer counts
     when budgeting corpora (no tokenizer libs in-container)."""
-    text = F.col(text) if isinstance(text, str) else text
     pieces = F.regexp_extract_all(
-        F.lower(text), F.lit(r"[a-z]{1,6}|[0-9]+|[^a-z0-9\s]"), 0
+        F.lower(_col(text)), F.lit(r"[a-z]{1,6}|[0-9]+|[^a-z0-9\s]"), 0
     )
     return F.size(pieces).cast("long")
 
@@ -71,7 +97,7 @@ def lang_id(text: Column | str) -> Column:
 def non_alnum_count(text: Column | str) -> Column:
     """Characters that are not [a-z0-9 ] after lowering — punctuation/
     symbol load, an ingredient of quality scoring."""
-    text = F.col(text) if isinstance(text, str) else text
+    text = _col(text)
     return (
         F.length(text) - F.length(F.regexp_replace(F.lower(text), "[^a-z0-9 ]", ""))
     ).cast("long")
@@ -99,14 +125,36 @@ def fingerprint(text: Column | str) -> Column:
     """Normalized content fingerprint: md5 of the text with everything
     but [a-z0-9] stripped — catches whitespace/punctuation-variant exact
     dups. For shift-tolerant fingerprints see dedup.minhash_signature."""
-    text = F.col(text) if isinstance(text, str) else text
-    return F.md5(F.regexp_replace(F.lower(text), "[^a-z0-9]", ""))
+    return F.md5(F.regexp_replace(F.lower(_col(text)), "[^a-z0-9]", ""))
 
 
 def term_freq(toks: Column, term: str) -> Column:
     """Occurrences of ``term`` in a token-array column (JVM-side
     filter, no Python)."""
     return F.size(F.filter(toks, lambda t: t == F.lit(term))).cast("long")
+
+
+def _ordered_sum(key: str, val: str) -> Column:
+    """Aggregate: the per-group sum of the double column ``val``, added
+    left to right in ``key`` order (see the module docstring)."""
+    return F.aggregate(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct(key, val))), lambda s: s[val]
+        ),
+        F.lit(0.0),
+        lambda a, b: a + b,
+    )
+
+
+def _bm25(
+    tf: Column, idf: Column, dl: Column, avgdl: float, k1: float, b: float
+) -> Column:
+    """One term's BM25 contribution, one fixed IEEE tree:
+    ``idf * (tf * (k1+1)) / (tf + k1 * ((1-b) + b * (dl / avgdl)))``."""
+    return idf * (
+        (tf * F.lit(k1 + 1.0))
+        / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * (dl / F.lit(avgdl))))
+    )
 
 
 def bm25_topk(
@@ -128,12 +176,9 @@ def bm25_topk(
     with the pass-1 scalars folded in as literals, then global top-k via
     TakeOrderedAndProject (never a full sort).
 
-    Exactness: the usual BM25 log-idf is a libm call whose last ulp can
-    differ across engines, so this uses the rational RSJ idf
-    ``(N - df + 0.5) / (df + 0.5)`` — every operation in the score is
-    IEEE +,-,*,/ on identical inputs, making scores bit-identical on
-    Spark and the DuckDB oracle. Same ranking behavior (monotone in the
-    log's argument), reproducible hashes.
+    The idf is the rational RSJ ``(N - df + 0.5) / (df + 0.5)`` (see
+    the module docstring): same ranking as the log-idf (monotone in the
+    log's argument), scores bit-identical on Spark and the DuckDB oracle.
 
     The tokenized projection is cached as a plan-time barrier: without
     it CollapseProject inlines the split() into the dl expression and
@@ -142,8 +187,8 @@ def bm25_topk(
     finalize() lifetime: the returned top-k is localCheckpointed and the
     cache released.
     """
-    from .util import finalize, spread
-
+    if not terms:
+        raise ValueError("bm25_topk: terms must be non-empty")
     toks_df = df.select(
         F.col(id_col), tokens(text_col).alias("__toks")
     )
@@ -166,22 +211,20 @@ def bm25_topk(
     ).collect()[0]
     n = stats["n"]
     avgdl = stats["sumdl"] / n  # Python IEEE division == oracle's
-    k1p1 = k1 + 1.0
-    one_minus_b = 1.0 - b
-
-    score = None
-    for i in range(len(terms)):
-        tf = F.col(f"__tf{i}")
-        idf = (n - stats[f"df{i}"] + 0.5) / (stats[f"df{i}"] + 0.5)
-        contrib = F.lit(idf) * (
-            (tf * F.lit(k1p1))
-            / (
-                tf
-                + F.lit(k1)
-                * (F.lit(one_minus_b) + F.lit(b) * (F.col("__dl") / F.lit(avgdl)))
+    score = reduce(
+        Column.__add__,
+        [
+            _bm25(
+                F.col(f"__tf{i}"),
+                F.lit((n - stats[f"df{i}"] + 0.5) / (stats[f"df{i}"] + 0.5)),
+                F.col("__dl"),
+                avgdl,
+                k1,
+                b,
             )
-        )
-        score = contrib if score is None else score + contrib
+            for i in range(len(terms))
+        ],
+    )
 
     topk = (
         base.select(id_col, score.alias("score"))
@@ -223,17 +266,12 @@ def bm25_topk_multi(
     * per-query top-k is a window PARTITIONED BY query_id — never a
       global orderBy (VERDICT r4 item 5).
 
-    Exactness contract (same spirit as bm25_topk): the score is a sum
-    of per-term double contributions whose ADDITION ORDER is pinned by
-    folding a term_idx-sorted array left-to-right (``F.aggregate``), so
-    a DuckDB oracle using ``list_reduce(list(... ORDER BY term_idx))``
-    reproduces bit-identical doubles; the OUTPUT carries only BIGINT
-    ranks. Docs matching no query term are absent (score would be 0).
+    The score is the term contributions summed in ``term_idx`` order
+    (see the module docstring); the OUTPUT carries only BIGINT ranks.
+    Docs matching no query term are absent (score would be 0).
 
     Output: (query_id, doc_id, rank) with rank in 1..k.
     """
-    from .util import finalize, spread
-
     spark = df.sparkSession
     qrows = [
         (int(qid), i, t)
@@ -274,31 +312,15 @@ def bm25_topk_multi(
     )
 
     idf = (F.lit(n) - F.col("df_t") + F.lit(0.5)) / (F.col("df_t") + F.lit(0.5))
-    tf = F.col("tf").cast("double")
-    contrib = idf * (
-        (tf * F.lit(k1 + 1.0))
-        / (
-            tf
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * (F.col("dl") / F.lit(avgdl)))
-        )
-    )
+    contrib = _bm25(F.col("tf").cast("double"), idf, F.col("dl"), avgdl, k1, b)
     contribs = (
         postings.join(F.broadcast(qterms), "term")
         .join(F.broadcast(term_df), "term")
         .select("query_id", "doc_id", "term_idx", contrib.alias("contrib"))
     )
     scores = contribs.groupBy("query_id", "doc_id").agg(
-        F.aggregate(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("term_idx"), F.col("contrib")))
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score")
+        _ordered_sum("term_idx", "contrib").alias("score")
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id")
     )
@@ -316,8 +338,6 @@ def text_profile(
     """One-pass per-document profile: counts, language, quality,
     fingerprint. Single narrow projection — no shuffle (beyond spreading
     single-partition small inputs across cores)."""
-    from .util import spread
-
     df = spread(df)
     t = F.col(text_col)
     return df.select(
@@ -354,7 +374,7 @@ def redact_pii(text: Column | str) -> Column:
     """Replace every PII match with its placeholder token. A chain of
     regexp_replace calls — all JVM-side, codegen-friendly, no shuffle;
     at 100 TB this runs at scan speed alongside the other narrow maps."""
-    out = F.col(text) if isinstance(text, str) else text
+    out = _col(text)
     for kind in PII_ORDER:
         pattern, token = PII_PATTERNS[kind]
         out = F.regexp_replace(out, pattern, token)
@@ -365,9 +385,8 @@ def pii_counts(text: Column | str) -> list[Column]:
     """One count column per PII kind (pre-redaction hit counts) for
     audit reports; counts run on the raw text so they are independent
     of redaction order."""
-    t = F.col(text) if isinstance(text, str) else text
     return [
-        F.regexp_count(t, F.lit(PII_PATTERNS[kind][0])).cast("long").alias(
+        F.regexp_count(_col(text), F.lit(PII_PATTERNS[kind][0])).cast("long").alias(
             f"n_{kind}"
         )
         for kind in PII_ORDER
@@ -399,8 +418,6 @@ def rare_token_stats(
     Output (all BIGINT, cross-engine exact):
     (doc_id, n_tokens, n_rare, n_distinct_rare).
     """
-    from .util import spread
-
     toks_df = spread(
         df.select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("__toks"))
     )
@@ -456,13 +473,7 @@ def gopher_rules(
     ``n_symbols * 100`` vs ``n_chars * max_pct`` — integer comparisons
     only, so the flags are bit-identical on any engine.
     """
-    n_tok = token_count(text)
-    n_chars = (
-        F.length(F.col(text) if isinstance(text, str) else text).cast("long")
-    )
-    n_sym = non_alnum_count(text)
-    n_stop = stopword_hits(text, LANG_STOPWORDS["en"])
-    return gopher_rules_from_counts(n_tok, n_chars, n_sym, n_stop, params)
+    return gopher_rules_from_counts(**gopher_counts(text), params=params)
 
 
 def gopher_counts(text: Column | str) -> dict[str, Column]:
@@ -473,9 +484,7 @@ def gopher_counts(text: Column | str) -> dict[str, Column]:
     attributes to :func:`gopher_rules_from_counts`."""
     return {
         "n_tok": token_count(text),
-        "n_chars": F.length(
-            F.col(text) if isinstance(text, str) else text
-        ).cast("long"),
+        "n_chars": F.length(_col(text)).cast("long"),
         "n_sym": non_alnum_count(text),
         "n_stop": stopword_hits(text, LANG_STOPWORDS["en"]),
     }
@@ -502,29 +511,52 @@ def gopher_rules_from_counts(
     }
 
 
+def _pairs(t: Column) -> Column:
+    """The adjacent ``(left_tok, right_tok)`` struct array of a token
+    array — ``t[:-1]`` zipped with ``t[1:]`` in-row; empty below 2
+    tokens."""
+    n = F.size(t)
+    return F.zip_with(
+        F.slice(t, 1, n - F.lit(1)),
+        F.slice(t, 2, n - F.lit(1)),
+        lambda l, r: F.struct(l.alias("left_tok"), r.alias("right_tok")),
+    )
+
+
+def _unigrams(df: DataFrame, text_col: str) -> DataFrame:
+    """The corpus unigram count table ``(w, cnt)``: one explode plus a
+    map-side-combined aggregate, vocabulary-sized."""
+    return (
+        df.select(F.explode(tokens(text_col)).alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
+def _join_unigrams(pairs: DataFrame, uni: DataFrame) -> DataFrame:
+    """``pairs`` with the broadcast unigram counts of its two sides as
+    ``cl`` (left_tok) and ``cr`` (right_tok)."""
+    ul = uni.select(F.col("w").alias("left_tok"), F.col("cnt").alias("cl"))
+    ur = uni.select(F.col("w").alias("right_tok"), F.col("cnt").alias("cr"))
+    return pairs.join(F.broadcast(ul), "left_tok").join(F.broadcast(ur), "right_tok")
+
+
 def adjacent_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
     """All adjacent token pairs of every document — the count table a
     BPE/WordPiece tokenizer trainer consumes for its merge step (the
     most frequent pair becomes the next merge rule).
 
-    ``zip_with(tokens[:-1], tokens[1:])`` builds the pair structs
-    inside the row (JVM-side, no Python), one explode streams them
-    out, and the caller's ``groupBy(left_tok, right_tok).count()``
-    partially aggregates map-side — so at 100 TB the shuffle carries
+    :func:`_pairs` builds the pair structs inside the row (JVM-side,
+    no Python), one explode streams them out, and the caller's
+    ``groupBy(left_tok, right_tok).count()`` partially aggregates
+    map-side — so at 100 TB the shuffle carries
     only the distinct-pair partial counts (bounded by vocabulary²
     observed, in practice far smaller), never the corpus.
     """
-    from .util import spread
-
     df = spread(df)  # single-file demo inputs must not serialize the explode
-    t = tokens(text_col)
-    n = F.size(t)
-    pairs = F.zip_with(
-        F.slice(t, 1, n - F.lit(1)),
-        F.slice(t, 2, n - F.lit(1)),
-        lambda l, r: F.struct(l.alias("left_tok"), r.alias("right_tok")),
+    return df.select(F.explode(_pairs(tokens(text_col))).alias("p")).select(
+        "p.left_tok", "p.right_tok"
     )
-    return df.select(F.explode(pairs).alias("p")).select("p.left_tok", "p.right_tok")
 
 
 def unigram_nll(
@@ -541,18 +573,12 @@ def unigram_nll(
     a 100 TB web corpus has a token vocabulary in the low millions);
     token scoring is then a broadcast join, and the per-document
     reduction is a second hash aggregate.  The corpus-total token
-    count rides a one-row crossJoin, not a driver collect.
-
-    Cross-engine exactness: the per-document sum of ``ln(count)``
-    terms folds in PINNED token order (array_sort over (pos, lp)
-    structs, then a left fold) so an oracle replaying the same fold
-    (DuckDB ``list_reduce(list(lp ORDER BY pos))``) lands on the
-    bit-identical double — the same technique bm25_topk_multi uses.
+    count rides a one-row crossJoin, not a driver collect.  The
+    per-document sum of ``ln(count)`` terms folds in token order (see
+    the module docstring).
 
     Output: ``(doc_id, n_tokens, avg_nll DOUBLE)``.
     """
-    from .util import spread
-
     df = spread(df)
     tok = df.select(
         F.col(id_col).alias("doc_id"),
@@ -564,15 +590,7 @@ def unigram_nll(
         "doc_id", "pos", F.log(F.col("cnt").cast("double")).alias("lp")
     )
     agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "lp"))),
-                lambda s: s["lp"],
-            ),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ).alias("ll"),
+        F.count(F.lit(1)).alias("n_tokens"), _ordered_sum("pos", "lp").alias("ll")
     )
     return agg.crossJoin(F.broadcast(total)).select(
         "doc_id",
@@ -610,55 +628,24 @@ def bigram_nll(
     back SHUFFLED on (l, r) — bigram vocabulary is corpus-sized, so
     unlike the unigram table it is never broadcast; both unigram
     lookups and the corpus total ride broadcasts.  Scoring positions
-    are the n-1 adjacent pairs, carried with their in-document
-    position so the log-prob sum folds in PINNED order.
-
-    Cross-engine exactness: each lp is one fixed IEEE tree
-    (div, mul, div, mul, add, ln — replayed operation-for-operation by
-    the DuckDB oracle) and the per-document sum is the pinned-order
-    fold, so ``avg_nll`` is bit-identical cross-engine (the
-    unigram_nll / bm25 technique).
+    are the n-1 adjacent pairs (:func:`_pairs`), carried with their
+    in-document position; each lp is one fixed IEEE tree (div, mul,
+    div, mul, add, ln) and the per-document sum folds in position
+    order (see the module docstring).
 
     Output: ``(doc_id, n_bigrams, avg_nll DOUBLE)`` — documents with
     fewer than 2 tokens have no bigram and emit no row.
     """
-    from .util import spread
-
     df = spread(df)
-    t = tokens(text_col)
-    n = F.size(t)
     pairs = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.when(
-                n >= 2,
-                F.transform(
-                    F.sequence(F.lit(1), n - 1),
-                    lambda i: F.struct(
-                        i.alias("pos"),
-                        F.element_at(t, i).alias("l"),
-                        F.element_at(t, i + 1).alias("r"),
-                    ),
-                ),
-            ).otherwise(
-                F.array().cast(
-                    "array<struct<pos:int,l:string,r:string>>"
-                )
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.pos", "p.l", "p.r")
-
-    tok = df.select(F.explode(t).alias("w"))
-    uni = tok.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
+        F.posexplode(_pairs(tokens(text_col))).alias("pos", "p"),
+    ).select("doc_id", "pos", "p.left_tok", "p.right_tok")
+    uni = _unigrams(df, text_col)
     total = uni.agg(F.sum("cnt").alias("n_total"))
-    big = pairs.groupBy("l", "r").agg(F.count(F.lit(1)).alias("cb"))
-
-    ul = uni.select(F.col("w").alias("l"), F.col("cnt").alias("cl"))
-    ur = uni.select(F.col("w").alias("r"), F.col("cnt").alias("cr"))
+    big = pairs.groupBy("left_tok", "right_tok").agg(F.count(F.lit(1)).alias("cb"))
     scored = (
-        pairs.join(big, ["l", "r"])
-        .join(F.broadcast(ul), "l")
-        .join(F.broadcast(ur), "r")
+        _join_unigrams(pairs.join(big, ["left_tok", "right_tok"]), uni)
         .crossJoin(F.broadcast(total))
         .select(
             "doc_id",
@@ -676,17 +663,9 @@ def bigram_nll(
     )
     return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-        (
-            -F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "lp"))),
-                    lambda s: s["lp"],
-                ),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            )
-            / F.count(F.lit(1)).cast("double")
-        ).alias("avg_nll"),
+        (-_ordered_sum("pos", "lp") / F.count(F.lit(1)).cast("double")).alias(
+            "avg_nll"
+        ),
     )
 
 
@@ -704,9 +683,8 @@ def pmi_pairs(
     one-row broadcast crossJoin.  ``min_count`` suppresses the
     unstable low-frequency tail (classic PMI failure mode).
 
-    Cross-engine exactness: identical IEEE tree — integer counts cast
-    to double, two multiplies, one divide, one ln — so an oracle
-    replaying the same tree lands on the bit-identical double.
+    The score is one IEEE tree — integer counts cast to double, two
+    multiplies, one divide, one ln (see the module docstring).
 
     Output: ``(left_tok, right_tok, pair_count, pmi)``.
     """
@@ -714,18 +692,12 @@ def pmi_pairs(
     big = pairs.groupBy("left_tok", "right_tok").agg(
         F.count(F.lit(1)).alias("pair_count")
     )
-    uni = (
-        df.select(F.explode(tokens(text_col)).alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
     n = big.agg(F.sum("pair_count").alias("np"))
-    ul = uni.select(F.col("w").alias("left_tok"), F.col("c").alias("cl"))
-    ur = uni.select(F.col("w").alias("right_tok"), F.col("c").alias("cr"))
     return (
-        big.filter(F.col("pair_count") >= F.lit(min_count))
-        .join(F.broadcast(ul), "left_tok")
-        .join(F.broadcast(ur), "right_tok")
+        _join_unigrams(
+            big.filter(F.col("pair_count") >= F.lit(min_count)),
+            _unigrams(df, text_col),
+        )
         .crossJoin(F.broadcast(n))
         .select(
             "left_tok",
@@ -741,18 +713,23 @@ def pmi_pairs(
 
 def hashed_token_weight(tok: Column, weight_mod: int = 2001) -> Column:
     """Deterministic integer weight for a token under the hashing trick:
-    the first 8 hex chars of md5(token) as an integer, mapped to the
-    symmetric range ``[-(weight_mod//2), weight_mod//2]``.
+    its :func:`hashed_feature` bucket shifted to the symmetric range
+    ``[-(weight_mod//2), weight_mod//2]``.
 
-    md5 (not xxhash64) so the SAME weight is computable in any engine —
-    the repo's standard portable-hash rule.  In production the weight
-    table comes from a trained model (broadcast ``map_from_entries``
-    lookup with this same expression as the feature hasher); the
-    hash-derived surrogate keeps the full inference plumbing testable
-    without shipping model weights.
+    In production the weight table comes from a trained model
+    (broadcast ``map_from_entries`` lookup with the same feature
+    hasher); the hash-derived surrogate keeps the full inference
+    plumbing testable without shipping model weights.
     """
-    h = F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long")
-    return h % F.lit(weight_mod) - F.lit(weight_mod // 2)
+    return hashed_feature(tok, weight_mod) - F.lit(weight_mod // 2)
+
+
+def _label(df: DataFrame, score: Column, threshold: int) -> DataFrame:
+    """``df`` plus ``score`` and ``label`` ('keep' iff
+    ``score >= threshold``, else 'drop')."""
+    return df.withColumn("score", score).withColumn(
+        "label", F.when(F.col("score") >= threshold, "keep").otherwise("drop")
+    )
 
 
 def hashed_linear_score(
@@ -778,19 +755,39 @@ def hashed_linear_score(
         F.lit(0).cast("long"),
         lambda acc, t: acc + hashed_token_weight(t, weight_mod),
     )
-    return df.withColumn("score", score).withColumn(
-        "label",
-        F.when(F.col("score") >= threshold, "keep").otherwise("drop"),
-    )
+    return _label(df, score, threshold)
 
 
 def hashed_feature(tok: Column, feature_mod: int = 2001) -> Column:
-    """Feature-bucket id for a token under the hashing trick — the same
-    portable md5 hasher as :func:`hashed_token_weight`, kept as the
-    nonnegative bucket ``[0, feature_mod)`` (the md5-derived integer is
-    < 2^32, so ``%`` is nonnegative in every engine)."""
+    """Feature-bucket id for a token under the hashing trick: the first
+    8 hex chars of md5(token) as an integer (see the module docstring),
+    modulo ``feature_mod`` — the nonnegative bucket ``[0, feature_mod)``
+    (the md5-derived integer is < 2^32, so ``%`` is nonnegative in
+    every engine)."""
     h = F.conv(F.substring(F.md5(tok), 1, 8), 16, 10).cast("long")
     return h % F.lit(feature_mod)
+
+
+def _class_counts(flag: str, pos: str, neg: str) -> list[Column]:
+    """Aggregates: BIGINT counts of the rows where boolean ``flag`` is
+    true (``pos``) and where it is not (``neg``)."""
+    f = F.col(flag)
+    return [
+        F.sum(F.when(f, 1).otherwise(0)).cast("long").alias(pos),
+        F.sum(F.when(f, 0).otherwise(1)).cast("long").alias(neg),
+    ]
+
+
+def _feature_rows(
+    df: DataFrame, text_col: str, feature_mod: int, **keep: str
+) -> DataFrame:
+    """One row per space-split token occurrence: the columns of
+    ``keep`` (alias -> source column) plus the token's hashed
+    ``feature`` bucket."""
+    return df.select(
+        *[F.col(c).alias(a) for a, c in keep.items()],
+        F.explode(tokens(text_col, " ")).alias("__t"),
+    ).select(*keep, hashed_feature(F.col("__t"), feature_mod).alias("feature"))
 
 
 def nb_train_weights(
@@ -820,8 +817,8 @@ def nb_train_weights(
     truncating integer division.  This is the engine-exact form of
     NB log-count weights: it is a strictly monotone per-feature
     statistic of the empirical log-odds, but every arithmetic step is
-    integer (float ``ln`` differs across engines in the last ulps, so
-    log-space weights could not be oracle-checked exactly).  An unseen
+    integer (log-space weights would go through ``ln``; see the module
+    docstring).  An unseen
     feature's smoothed weight is exactly 0 (``(0+1)*scale div 2 -
     scale div 2``, scale even), so scoring can coalesce misses to 0
     and remain faithful to the smoothing.
@@ -833,24 +830,10 @@ def nb_train_weights(
     """
     if scale % 2 != 0:
         raise ValueError("nb_train_weights: scale must be even")
-    tok = labeled.select(
-        F.col(label_col).alias("__pos"),
-        F.explode(tokens(F.col(text_col), " ")).alias("__t"),
-    )
     counts = (
-        tok.select(
-            hashed_feature(F.col("__t"), feature_mod).alias("feature"),
-            "__pos",
-        )
+        _feature_rows(labeled, text_col, feature_mod, __pos=label_col)
         .groupBy("feature")
-        .agg(
-            F.sum(F.when(F.col("__pos"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_pos"),
-            F.sum(F.when(F.col("__pos"), 0).otherwise(1))
-            .cast("long")
-            .alias("n_neg"),
-        )
+        .agg(*_class_counts("__pos", "n_pos", "n_neg"))
     )
     return counts.select(
         "feature",
@@ -898,15 +881,7 @@ def hashed_linear_score_trained(
             F.lit(0).cast("long"),
         ),
     )
-    return (
-        df.crossJoin(F.broadcast(wmap))
-        .withColumn("score", score)
-        .withColumn(
-            "label",
-            F.when(F.col("score") >= threshold, "keep").otherwise("drop"),
-        )
-        .drop("__wmap")
-    )
+    return _label(df.crossJoin(F.broadcast(wmap)), score, threshold).drop("__wmap")
 
 
 def source_kl_rank(
@@ -930,18 +905,10 @@ def source_kl_rank(
     Per-group state is bounded by the vocabulary (low millions even at
     100 TB — the unigram-LM broadcast's bound), not by the corpus.
 
-    Exactness: ``ln`` is NOT bit-portable across engines (the JVM's
-    fdlibm log and glibc's differ by 1 ulp on many integer inputs, ln(3)
-    among them — measured), so the divergence double stays INTERNAL and
-    only the rank crosses; the pinned-order fold (array_sort + left
-    fold == DuckDB list_reduce over an ORDER BY w list) keeps each
-    engine's sum deterministic under any partitioning, and inter-group
+    The divergence double stays internal and only the rank crosses; the
+    sum folds in ``w`` order (see the module docstring), and inter-group
     KL gaps dwarf ulp noise.
     """
-    from pyspark.sql import Window
-
-    from .util import finalize
-
     tok = df.select(
         F.col(group_col).alias("g"), F.explode(tokens(text_col)).alias("w")
     )
@@ -963,16 +930,7 @@ def source_kl_rank(
         .crossJoin(F.broadcast(tot))
         .select("g", "w", term.alias("term"))
     )
-    agg = terms.groupBy("g").agg(
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("w", "term"))),
-                lambda s: s["term"],
-            ),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ).alias("kl_nat")
-    )
+    agg = terms.groupBy("g").agg(_ordered_sum("w", "term").alias("kl_nat"))
     w = Window.orderBy(F.col("kl_nat").desc(), "g")
     return (
         ns.join(agg, "g")
@@ -1020,20 +978,14 @@ def dsir_topk(
     honest two-scan cost of exact corpus-derived distributions, same
     trade as source_mixture_plan.
 
-    Cross-engine exactness: per-token terms fold per-bucket into one
-    fixed IEEE tree ((ln(ct+1) - ln(cr+1)) + (ln(nr+B) - ln(nt+B)))
-    and the per-doc sum folds in PINNED position order (the
-    unigram_nll technique), so both engines order documents
-    identically; the double stays internal and only the BIGINT
-    ``sel_rank`` crosses.
+    Per-token terms fold per-bucket into one fixed IEEE tree
+    ((ln(ct+1) - ln(cr+1)) + (ln(nr+B) - ln(nt+B))) and the per-doc sum
+    folds in position order; the double stays internal and only the
+    BIGINT ``sel_rank`` crosses (see the module docstring).
 
     Output: ``(doc_id, n_tokens, sel_rank)`` for the k selected raw
     documents, rank 1 = most target-like.
     """
-    from pyspark.sql import Window
-
-    from .util import spread
-
     df = spread(df)
     tok = df.select(
         F.col(id_col).alias("doc_id"),
@@ -1045,10 +997,7 @@ def dsir_topk(
         "pos",
         hashed_feature(F.col("w"), feature_mod).alias("b"),
     )
-    counts = tok.groupBy("b").agg(
-        F.sum(F.when(F.col("__is_t"), 1).otherwise(0)).cast("long").alias("ct"),
-        F.sum(F.when(F.col("__is_t"), 0).otherwise(1)).cast("long").alias("cr"),
-    )
+    counts = tok.groupBy("b").agg(*_class_counts("__is_t", "ct", "cr"))
     totals = counts.agg(
         F.sum("ct").cast("long").alias("nt"), F.sum("cr").cast("long").alias("nr")
     )
@@ -1068,15 +1017,7 @@ def dsir_topk(
     )
     scored = tok.filter(~F.col("__is_t")).join(F.broadcast(ratio), "b")
     agg = scored.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "lr"))),
-                lambda s: s["lr"],
-            ),
-            F.lit(0.0),
-            lambda a, b: a + b,
-        ).alias("lw"),
+        F.count(F.lit(1)).alias("n_tokens"), _ordered_sum("pos", "lr").alias("lw")
     )
     top = agg.orderBy(F.col("lw").desc(), "doc_id").limit(k)
     w = Window.orderBy(F.col("lw").desc(), "doc_id")
@@ -1126,27 +1067,18 @@ def perceptron_train(
     Scale shape: the (doc, feature, count) design matrix is built once
     (one explode + hash aggregate) and persisted DISK_ONLY; each round
     is one broadcast join of the M-row weight table + two map-side-
-    combinable aggregates; driver traffic is M rows per round (the
+    combinable aggregates, and its error count is observed by the
+    error rows' checkpoint job (``util.materialize``, the round
+    primitive of ``graph.py``); driver traffic is M rows per round (the
     same bounded-loop contract as BPE training's 1 row/round).
     Weights grow by at most sum(|x|) per round — BIGINT-safe into the
     billions of token occurrences; roll the margin sum in
     decimal(38,0) beyond that.
     """
-    from pyspark import StorageLevel
-
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     x = (
-        labeled.select(
-            F.col(label_col).alias("__pos"),
-            F.col(id_col).alias("__rid"),
-            F.explode(tokens(F.col(text_col), " ")).alias("__t"),
-        )
-        .select(
-            "__pos",
-            "__rid",
-            hashed_feature(F.col("__t"), feature_mod).alias("feature"),
-        )
+        _feature_rows(labeled, text_col, feature_mod, __pos=label_col, __rid=id_col)
         .groupBy("__rid", "__pos", "feature")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .persist(StorageLevel.DISK_ONLY)
@@ -1170,18 +1102,17 @@ def perceptron_train(
             margins = joined.groupBy("__rid", "__pos").agg(
                 F.sum(F.col("cnt") * F.col("w")).alias("m")
             )
-            # localCheckpoint: err feeds BOTH the count and the
-            # gradient join — without it each action recomputes the
-            # margins pass (measured ~40% of per-round work). The
-            # frame is (id, flag) rows over the labeled set; blocks
-            # are freed when the loop's next round replaces them.
-            err = (
+            # util.materialize: the round's error rows are checkpointed
+            # once (the gradient join reads them without recomputing the
+            # margins pass) and their count is observed by that same
+            # job, so no count job follows.  Blocks are freed when the
+            # next round replaces the frame.
+            err, n_errors = materialize(
                 margins.filter(
                     (F.col("__pos") & (F.col("m") <= 0))
                     | (~F.col("__pos") & (F.col("m") >= 0))
-                )
-                .select("__rid", "__pos")
-                .localCheckpoint(eager=True)
+                ).select("__rid", "__pos"),
+                F.count(F.lit(1)),
             )
             grad = (
                 x.join(err, ["__rid", "__pos"])
@@ -1194,7 +1125,6 @@ def perceptron_train(
                     ).alias("g")
                 )
             )
-            n_errors = err.count()
             for row in grad.collect():
                 weights[row["feature"]] = (
                     weights.get(row["feature"], 0) + row["g"]

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 
 def finalize(result: DataFrame, *intermediates: DataFrame) -> DataFrame:
@@ -33,6 +33,23 @@ def finalize(result: DataFrame, *intermediates: DataFrame) -> DataFrame:
     for df in intermediates:
         df.unpersist()
     return out
+
+
+def materialize(
+    df: DataFrame, metric: Column, *drop: str
+) -> tuple[DataFrame, int]:
+    """One round's state for an iterative loop: ``df`` checkpointed
+    eagerly, with ``metric`` (an aggregate over ``df``'s rows) observed
+    by the checkpoint's own job, so the scalar that decides the next
+    round costs no second job.  Columns named in ``drop`` feed only the
+    metric and are left out of the checkpoint."""
+    obs = Observation()
+    cp = (
+        df.observe(obs, metric.alias("m"))
+        .drop(*drop)
+        .localCheckpoint(eager=True)
+    )
+    return cp, obs.get["m"]
 
 
 def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -7,6 +7,8 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalar import _col
+
 
 def top_k_per_group(
     df: DataFrame,
@@ -29,7 +31,7 @@ def top_k_per_group(
     order_cols..., payload)))`` — both are exposed so callers can pick.
     """
     keys = list(keys)
-    order = [F.col(c) if isinstance(c, str) else c for c in order_by]
+    order = [_col(c) for c in order_by]
     w = Window.partitionBy(*keys).orderBy(*order)
     rn = "__rank" if rank_col is None else rank_col
     out = df.withColumn(rn, F.row_number().over(w)).filter(F.col(rn) <= k)
@@ -107,10 +109,7 @@ def top_1_per_group_agg(
     otherwise use :func:`top_k_per_group`).
     """
     keys = list(keys)
-    order = [
-        (c.alias(f"__o{i}") if not isinstance(c, str) else F.col(c).alias(f"__o{i}"))
-        for i, c in enumerate(order_by)
-    ]
+    order = [_col(c).alias(f"__o{i}") for i, c in enumerate(order_by)]
     payload = list(payload)
     packed = F.max(F.struct(*order, *[F.col(c) for c in payload])).alias("__top")
     out = df.groupBy(*keys).agg(packed)
@@ -265,7 +264,7 @@ def global_row_number(
     equal keys would otherwise land in one partition but rank
     arbitrarily within their tie.
     """
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
+    cols = [_col(c) for c in order_cols]
     if not cols:
         raise ValueError("global_row_number: need at least one order col")
     parts = (

@@ -497,6 +497,26 @@ def test_bm25_ranks_matching_docs_first(spark):
     assert all(s >= 0 for s in scores.values())
 
 
+def test_bm25_empty_terms_rejected_before_side_effects(spark):
+    # the terms are checked before the token table is cached: an empty
+    # query raises ValueError, runs no job and caches nothing
+    from customer_360_etl_pipeline_on_azure_cloud_spark.operators.text import bm25_topk
+
+    df = spark.createDataFrame([(1, "spark hash join")], ["doc_id", "text"])
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    sc = spark.sparkContext
+    sc.setJobGroup("bm25_empty_terms", "empty BM25 query")
+    try:
+        with pytest.raises(ValueError, match="terms"):
+            bm25_topk(df, [])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("bm25_empty_terms")) == []
+    assert cache.isEmpty()
+
+
 def test_cms_never_underestimates_even_with_collisions(spark):
     from customer_360_etl_pipeline_on_azure_cloud_spark.operators.aggregates import (
         cms_frequencies,

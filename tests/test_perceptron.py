@@ -87,3 +87,30 @@ def test_deterministic_across_partitionings(spark):
         df1.repartition(13), "__label", "doc_id", feature_mod=53, rounds=3
     )
     assert c1 == c2 and w1 == w2
+
+
+def test_rounds_take_error_counts_from_the_checkpoint(spark, monkeypatch):
+    # each round's error count is observed by its checkpoint job, so no
+    # DataFrame.count() action runs inside the training loop
+    rows = [
+        (i, i % 2 == 0, f"tok{i % 5} tok{i % 11} tok{i % 3}")
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, __label boolean, text string"
+    )
+
+    def no_count(self):
+        raise AssertionError("DataFrame.count() called")
+
+    # patch the concrete class: pyspark.sql.DataFrame may be an
+    # abstract base whose implementation class overrides count()
+    monkeypatch.setattr(type(df), "count", no_count)
+    got_w, got_curve = perceptron_train(
+        df, "__label", "doc_id", feature_mod=53, rounds=3
+    )
+    ref_w, ref_curve = _ref_train(rows, 53, 3)
+    assert got_curve == ref_curve
+    assert {f: w for f, w in got_w.items() if w != 0} == {
+        f: w for f, w in ref_w.items() if w != 0
+    }

@@ -467,6 +467,25 @@ def test_bpe_train_merged_symbol_feeds_next_round(spark):
     assert got[1] == (2, "a+b", "c", 3)
 
 
+def test_bpe_train_skips_the_last_rounds_rewrite(spark, monkeypatch):
+    # no round reads the corpus rewritten by the last merge, so K found
+    # merges rewrite the corpus K - 1 times
+    from customer_360_etl_pipeline_on_azure_cloud_spark.operators import bpe
+
+    calls = []
+    real = bpe.merge_pair
+
+    def counted(*args, **kwargs):
+        calls.append(args[1:3])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(bpe, "merge_pair", counted)
+    docs = _docs(spark, [(i, "a b c d e") for i in range(3)])
+    got = [tuple(r) for r in bpe.bpe_train(docs, n_merges=3).orderBy("merge_rank").collect()]
+    assert [r[0] for r in got] == [1, 2, 3]
+    assert len(calls) == 2
+
+
 # --- split leakage: the audit and its fix, closed loop -----------------------
 
 
