@@ -4,10 +4,10 @@ from __future__ import annotations
 
 from collections.abc import Iterable, Mapping
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.scalar import _col
+from .windows import top_k_per_group
 
 
 def drop_sentinels(df: DataFrame, sentinels: Mapping[str, object]) -> DataFrame:
@@ -32,15 +32,9 @@ def dedup_deterministic(
     ``dropDuplicates(subset)`` whose survivor is arbitrary
     (reference ETL_pipeline.py:302; SURVEY.md §0.1).
 
-    Physical shape: one hash-partition shuffle on ``keys`` + in-partition
-    sort (row_number), then filter. Scales linearly; skewed keys are
-    handled by AQE skew-join/partition splitting.
+    This is :func:`~.windows.top_k_per_group` with ``k=1``: one
+    hash-partition shuffle on ``keys`` + in-partition sort, with a
+    partial and a final ``WindowGroupLimit``. Scales linearly; skewed
+    keys are handled by AQE skew-join/partition splitting.
     """
-    keys = list(keys)
-    order = [_col(c) for c in order_by]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return top_k_per_group(df, keys, order_by, k=1)

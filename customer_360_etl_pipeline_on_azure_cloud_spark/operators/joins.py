@@ -1,15 +1,49 @@
 """Join operators (SURVEY.md §2.3 J1-J4).
 
-Spark's ``df.join`` already provides inner/left/right/full/semi/anti/cross
-— the engine adds the two shapes the reference needed glue for: broadcast
-dimension lookup and a *well-defined* positional zip.
+Spark's ``df.join`` already provides inner/left/right/full/semi/anti/cross.
+This module adds the shapes it lacks: a broadcast dimension lookup, a
+*well-defined* positional zip, the as-of join in three directions, and
+two range joins planned as hash equi-joins on integer bands.
+
+Ordering contract
+-----------------
+
+As-of joins (``asof_join_backward`` / ``_forward`` / ``_nearest``, one
+core ``_asof``):
+
+* both sides are tagged and unioned; right rows carry
+  ``struct(right_ts, right_values...)``, left rows a null there;
+* one window over ``by`` orders by ``(ts, tag)``.  The left tag is 1
+  for backward and nearest (right rows sort BEFORE left rows at equal
+  timestamps) and 0 for forward (left rows first), so every direction
+  matches inclusively;
+* the frames: backward is a running ``max`` of the right struct from
+  unbounded preceding to the current row, forward a running ``min``
+  from the current row to unbounded following; ``max``/``min`` skip
+  the left rows' nulls.  Nearest computes both and picks the smaller
+  ``|right_ts - left_ts|``, ties going backward (an equal-timestamp
+  match sits in the backward frame at distance 0);
+* struct order breaks ties at equal ``right_ts``: backward keeps the
+  LARGEST ``right_values`` (lexicographic), forward the SMALLEST —
+  total orders, so results do not depend on the split;
+* cost: ONE Exchange on ``by`` plus ONE Sort for every direction
+  (nearest stacks its two frames on the same sort), no join node.
+
+Band joins (``banded_range_join``, ``interval_overlap_join``): the band
+id of ``x`` is ``_band(x, width) = bigint(floor(x / width))``, and a
+range ``[lo, hi]`` explodes to ``_bands(lo, hi, width)``, the ids
+``_band(lo) .. _band(hi)``.  Candidates meet on (keys..., band id) in
+one co-partitioned hash equi-join; the exact predicate is re-applied as
+a residual filter, and each qualifying pair is emitted exactly once:
+a point lies in one band, and an interval pair is kept only in its
+first shared band.  Inner semantics only.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import _col
@@ -33,8 +67,12 @@ def lookup(
     a kilobyte-scale dim; AQE would usually catch it, but the hint makes
     the plan deterministic). ``alias`` renames the single value column.
     """
-    key_col = _col(key)
     value_cols = list(value_cols)
+    if alias is not None and len(value_cols) != 1:
+        raise ValueError(
+            f"lookup: alias requires exactly one value col, got {len(value_cols)}"
+        )
+    key_col = _col(key)
     dim_proj = dim.select(
         F.col(dim_key).alias("__lk"), *[F.col(c) for c in value_cols]
     )
@@ -42,9 +80,68 @@ def lookup(
         dim_proj = F.broadcast(dim_proj)
     out = df.join(dim_proj, key_col == F.col("__lk"), how).drop("__lk")
     if alias is not None:
-        assert len(value_cols) == 1, "alias requires exactly one value col"
         out = out.withColumnRenamed(value_cols[0], alias)
     return out
+
+
+def _asof(
+    left: DataFrame,
+    right: DataFrame,
+    by: str,
+    left_ts: str,
+    right_ts: str,
+    right_values: Iterable[str],
+    suffix: str,
+    direction: str,
+) -> DataFrame:
+    """The one as-of core (module docstring: tags, frames, pick)."""
+    rv = list(right_values)
+    r_struct = F.struct(F.col(right_ts).alias("__rts"), *[F.col(c) for c in rv])
+    l_struct = F.struct(*[F.col(c) for c in left.columns])
+    r_type = right.select(r_struct.alias("s")).schema["s"].dataType
+    l_type = left.select(l_struct.alias("s")).schema["s"].dataType
+    l_tag = 0 if direction == "forward" else 1
+
+    def side(df, ts, tag, l_val, r_val):
+        return df.select(
+            F.col(by).alias("__by"), F.col(ts).alias("__ts"),
+            F.lit(tag).alias("__tag"), l_val.alias("__left"), r_val.alias("__right"),
+        )
+
+    l_side = side(left, left_ts, l_tag, l_struct, F.lit(None).cast(r_type))
+    r_side = side(right, right_ts, 1 - l_tag, F.lit(None).cast(l_type), r_struct)
+    unioned = l_side.unionByName(r_side)
+    w = Window.partitionBy("__by").orderBy(F.col("__ts"), F.col("__tag"))
+    back = F.max("__right").over(w.rowsBetween(Window.unboundedPreceding, 0))
+    fwd = F.min("__right").over(w.rowsBetween(0, Window.unboundedFollowing))
+    is_left = F.col("__tag") == l_tag
+    if direction != "nearest":
+        pick = back if direction == "backward" else fwd
+        cand = unioned.withColumn("__pick", pick).filter(is_left)
+    else:
+        # native subtraction keeps full precision for every ts type:
+        # timestamps compare as day-time INTERVALs (microsecond-exact),
+        # numerics as numerics — never cast("long"), which truncates
+        # timestamps to SECONDS and would misjudge sub-second distances
+        d_back = F.col("__ts") - F.col("__back.__rts")
+        d_fwd = F.col("__fwd.__rts") - F.col("__ts")
+        cand = (
+            unioned.withColumn("__back", back)
+            .withColumn("__fwd", fwd)
+            .filter(is_left)
+            .withColumn(
+                "__pick",
+                F.when(F.col("__back").isNull(), F.col("__fwd"))
+                .when(F.col("__fwd").isNull(), F.col("__back"))
+                .when(d_back <= d_fwd, F.col("__back"))  # tie -> backward
+                .otherwise(F.col("__fwd")),
+            )
+        )
+    return cand.select(
+        "__left.*",
+        F.col("__pick.__rts").alias(f"{right_ts}{suffix}"),
+        *[F.col(f"__pick.{c}").alias(f"{c}{suffix}") for c in rv],
+    )
 
 
 def asof_join_backward(
@@ -58,60 +155,14 @@ def asof_join_backward(
 ) -> DataFrame:
     """As-of join: for every left row, attach the LATEST right row of the
     same ``by`` key with ``right_ts <= left_ts`` (backward direction,
-    inclusive). Spark has no native as-of join; this is the scalable
-    union-window construction:
-
-    1. tag and union both sides (right rows sort before left rows at
-       equal timestamps, making the match inclusive),
-    2. one window over (by) ordered by (ts, tag): running ``max(struct(
-       right_ts, right_values...))`` — nulls (left rows) are ignored by
-       max, so each left row sees the latest right payload at or before
-       its timestamp,
-    3. keep left rows.
-
-    Cost: ONE shuffle on ``by`` + per-partition sort — same shape as any
-    window; no range join, no per-row subquery. This is the standard
-    distributed as-of pattern (cf. pandas merge_asof semantics).
+    inclusive; pandas ``merge_asof`` semantics).  Spark has no native
+    as-of join; this is the union-window construction of the module
+    docstring — the running ``max`` frame, ties at equal ``right_ts``
+    to the largest ``right_values``.  Output: every left column plus
+    ``<right_ts><suffix>`` and ``<value><suffix>`` (nulls when no right
+    row qualifies).
     """
-    from pyspark.sql import Window
-
-    rv = list(right_values)
-    right_struct = F.struct(
-        F.col(right_ts).alias("__rts"), *[F.col(c) for c in rv]
-    )
-    left_struct = F.struct(*[F.col(c) for c in left.columns])
-    right_struct_type = right.select(right_struct.alias("s")).schema["s"].dataType
-    left_struct_type = left.select(left_struct.alias("s")).schema["s"].dataType
-
-    l_tag = left.select(
-        F.col(by).alias("__by"),
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__tag"),
-        left_struct.alias("__left"),
-        F.lit(None).cast(right_struct_type).alias("__right"),
-    )
-    r_tag = right.select(
-        F.col(by).alias("__by"),
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__tag"),
-        F.lit(None).cast(left_struct_type).alias("__left"),
-        right_struct.alias("__right"),
-    )
-    unioned = l_tag.unionByName(r_tag)
-    w = (
-        Window.partitionBy("__by")
-        .orderBy(F.col("__ts"), F.col("__tag"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    matched = unioned.withColumn("__last", F.max("__right").over(w)).filter(
-        F.col("__tag") == 1
-    )
-    out = matched.select(
-        "__left.*",
-        F.col("__last.__rts").alias(f"{right_ts}{suffix}"),
-        *[F.col(f"__last.{c}").alias(f"{c}{suffix}") for c in rv],
-    )
-    return out
+    return _asof(left, right, by, left_ts, right_ts, right_values, suffix, "backward")
 
 
 def asof_join_forward(
@@ -127,63 +178,11 @@ def asof_join_forward(
     EARLIEST right row of the same ``by`` key with ``right_ts >=
     left_ts`` (inclusive) — "the next quote after each trade", the
     mirror of :func:`asof_join_backward` (pandas
-    ``merge_asof(direction='forward')`` semantics).
-
-    Same scalable union-window construction, mirrored:
-
-    1. tag and union both sides (LEFT rows sort before right rows at
-       equal timestamps, making the match inclusive),
-    2. one window over (by) ordered by (ts, tag) with a
-       currentRow..unboundedFollowing frame: running ``min(struct(
-       right_ts, right_values...))`` — nulls (left rows) are ignored
-       by min, so each left row sees the earliest right payload at or
-       after its timestamp,
-    3. keep left rows.
-
-    Tiebreak convention: at equal ``right_ts`` the struct min picks
-    the row with the SMALLEST ``right_values`` (lexicographic), the
-    mirror of backward's max-picks-largest — both are total orders,
-    so results are split-invariant.  Cost: ONE shuffle on ``by`` +
-    per-partition sort, identical to the backward form.
+    ``merge_asof(direction='forward')`` semantics).  The running ``min``
+    frame of the module docstring; ties at equal ``right_ts`` go to the
+    SMALLEST ``right_values``.
     """
-    from pyspark.sql import Window
-
-    rv = list(right_values)
-    right_struct = F.struct(
-        F.col(right_ts).alias("__rts"), *[F.col(c) for c in rv]
-    )
-    left_struct = F.struct(*[F.col(c) for c in left.columns])
-    right_struct_type = right.select(right_struct.alias("s")).schema["s"].dataType
-    left_struct_type = left.select(left_struct.alias("s")).schema["s"].dataType
-
-    l_tag = left.select(
-        F.col(by).alias("__by"),
-        F.col(left_ts).alias("__ts"),
-        F.lit(0).alias("__tag"),
-        left_struct.alias("__left"),
-        F.lit(None).cast(right_struct_type).alias("__right"),
-    )
-    r_tag = right.select(
-        F.col(by).alias("__by"),
-        F.col(right_ts).alias("__ts"),
-        F.lit(1).alias("__tag"),
-        F.lit(None).cast(left_struct_type).alias("__left"),
-        right_struct.alias("__right"),
-    )
-    unioned = l_tag.unionByName(r_tag)
-    w = (
-        Window.partitionBy("__by")
-        .orderBy(F.col("__ts"), F.col("__tag"))
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    matched = unioned.withColumn("__next", F.min("__right").over(w)).filter(
-        F.col("__tag") == 0
-    )
-    return matched.select(
-        "__left.*",
-        F.col("__next.__rts").alias(f"{right_ts}{suffix}"),
-        *[F.col(f"__next.{c}").alias(f"{c}{suffix}") for c in rv],
-    )
+    return _asof(left, right, by, left_ts, right_ts, right_values, suffix, "forward")
 
 
 def asof_join_nearest(
@@ -198,84 +197,11 @@ def asof_join_nearest(
     """As-of join, NEAREST direction: for every left row, the right row
     of the same ``by`` key minimizing ``|right_ts - left_ts|``, ties
     toward the BACKWARD (at-or-before) side — pandas
-    ``merge_asof(direction='nearest')`` semantics.  Completes the
-    direction trio with :func:`asof_join_backward` /
-    :func:`asof_join_forward`.
-
-    ONE shuffle + ONE sort: both candidate frames ride the same
-    union-window pass — a running ``max(right_struct)`` over the
-    preceding frame (backward candidate) and a ``min(right_struct)``
-    over the following frame (forward candidate) share the window's
-    (by) partitioning and (ts, tag) ordering, so Catalyst plans a
-    single Exchange+Sort with two Window operators stacked on it.
-    Right rows sort BEFORE left rows at equal timestamps, so an
-    equal-timestamp match lands in the backward frame at distance 0 —
-    which wins every nearest comparison, making the forward frame's
-    exclusive boundary at equal ts harmless.
-
-    Per-side tiebreaks at equal ``right_ts`` follow each direction's
-    struct-order convention (backward: largest values; forward:
-    smallest values) — total orders, split-invariant.
+    ``merge_asof(direction='nearest')`` semantics.  Both frames of the
+    module docstring ride the same union-window pass; per-side ties at
+    equal ``right_ts`` follow each direction's struct order.
     """
-    from pyspark.sql import Window
-
-    rv = list(right_values)
-    right_struct = F.struct(
-        F.col(right_ts).alias("__rts"), *[F.col(c) for c in rv]
-    )
-    left_struct = F.struct(*[F.col(c) for c in left.columns])
-    right_struct_type = right.select(right_struct.alias("s")).schema["s"].dataType
-    left_struct_type = left.select(left_struct.alias("s")).schema["s"].dataType
-
-    l_tag = left.select(
-        F.col(by).alias("__by"),
-        F.col(left_ts).alias("__ts"),
-        F.lit(1).alias("__tag"),
-        left_struct.alias("__left"),
-        F.lit(None).cast(right_struct_type).alias("__right"),
-    )
-    r_tag = right.select(
-        F.col(by).alias("__by"),
-        F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__tag"),
-        F.lit(None).cast(left_struct_type).alias("__left"),
-        right_struct.alias("__right"),
-    )
-    unioned = l_tag.unionByName(r_tag)
-    order = [F.col("__ts"), F.col("__tag")]
-    wb = (
-        Window.partitionBy("__by")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wf = (
-        Window.partitionBy("__by")
-        .orderBy(*order)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    cand = (
-        unioned.withColumn("__back", F.max("__right").over(wb))
-        .withColumn("__fwd", F.min("__right").over(wf))
-        .filter(F.col("__tag") == 1)
-    )
-    # native subtraction keeps full precision for every ts type:
-    # timestamps compare as day-time INTERVALs (microsecond-exact),
-    # numerics as numerics — never cast("long"), which truncates
-    # timestamps to SECONDS and would misjudge sub-second distances
-    d_back = F.col("__ts") - F.col("__back.__rts")
-    d_fwd = F.col("__fwd.__rts") - F.col("__ts")
-    chosen = (
-        F.when(F.col("__back").isNull(), F.col("__fwd"))
-        .when(F.col("__fwd").isNull(), F.col("__back"))
-        .when(d_back <= d_fwd, F.col("__back"))  # tie -> backward
-        .otherwise(F.col("__fwd"))
-    )
-    picked = cand.withColumn("__pick", chosen)
-    return picked.select(
-        "__left.*",
-        F.col("__pick.__rts").alias(f"{right_ts}{suffix}"),
-        *[F.col(f"__pick.{c}").alias(f"{c}{suffix}") for c in rv],
-    )
+    return _asof(left, right, by, left_ts, right_ts, right_values, suffix, "nearest")
 
 
 def positional_zip(
@@ -303,8 +229,6 @@ def positional_zip(
     indexing instead; positional pairing of big distributed data is
     almost always a modeling error.
     """
-    from pyspark.sql import Window
-
     lo = [_col(c) for c in left_order]
     ro = [_col(c) for c in right_order]
     idx = index_name if keep_index else "__idx"
@@ -312,6 +236,28 @@ def positional_zip(
     rw = right.withColumn(idx, F.row_number().over(Window.orderBy(*ro)).cast("long"))
     out = lw.join(rw, on=idx, how=how)
     return out if keep_index else out.drop(idx)
+
+
+def _band(x: str, width: float) -> Column:
+    return F.floor(F.col(x) / width).cast("long")
+
+
+def _bands(lo: str, hi: str, width: float) -> Column:
+    return F.explode(F.sequence(_band(lo, width), _band(hi, width)))
+
+
+def _band_join(
+    left: DataFrame,
+    right: DataFrame,
+    keys: list[str],
+    l_band: Column,
+    r_band: Column,
+    exact: Column,
+) -> DataFrame:
+    """Equi-join on (keys..., band id), then the exact predicate."""
+    lb = left.withColumn("__bucket", l_band)
+    rb = right.withColumn("__bucket", r_band)
+    return lb.join(rb, [*keys, "__bucket"]).filter(exact).drop("__bucket")
 
 
 def banded_range_join(
@@ -329,32 +275,18 @@ def banded_range_join(
     Plain Spark plans a point-in-interval theta join as a
     BroadcastNestedLoopJoin (fine when one side broadcasts) or, when both
     sides are large, a cartesian product — quadratic and unusable at
-    scale. Banding rewrites it: each left row maps to the single band
-    containing its value; each right interval explodes to the bands it
-    overlaps (``ceil((hi-lo)/band_width)+1`` rows — pick ``band_width``
-    on the order of the typical interval width so the expansion factor
-    stays ~2); the join is then a hash equi-join on the band id with the
-    exact predicate re-applied as a post-filter. Each qualifying pair is
-    emitted exactly once (the left value lies in exactly one band), so
-    no dedup pass is needed. Both sides shuffle-partition by band —
-    at 100 TB this is one co-partitioned shuffle instead of a cross
-    product; band skew (a hot value range) is the same hot-key problem
-    as any join and composes with ``skew.salted_join``.
-
-    Inner semantics only: unmatched rows on either side are dropped.
+    scale.  Here each left row takes the band of its value and each
+    right interval explodes to the bands it overlaps
+    (``ceil((hi-lo)/band_width)+1`` rows — pick ``band_width`` on the
+    order of the typical interval width so the expansion factor stays
+    ~2); band ids, the residual predicate and emit-once are the module
+    docstring's band contract, so no dedup pass is needed.  Band skew (a
+    hot value range) is the same hot-key problem as any join and
+    composes with ``skew.salted_join``.
     """
-    band_l = F.floor(F.col(value_col) / band_width).cast("long")
-    lb = left.withColumn("__band", band_l)
-    band_lo = F.floor(F.col(lo_col) / band_width).cast("long")
-    band_hi = F.floor(F.col(hi_col) / band_width).cast("long")
-    rb = right.withColumn("__band", F.explode(F.sequence(band_lo, band_hi)))
-    return (
-        lb.join(rb, "__band")
-        .filter(
-            (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) <= F.col(hi_col))
-        )
-        .drop("__band")
-    )
+    exact = F.col(value_col).between(F.col(lo_col), F.col(hi_col))
+    lb, rb = _band(value_col, band_width), _bands(lo_col, hi_col, band_width)
+    return _band_join(left, right, [], lb, rb, exact)
 
 
 def interval_overlap_join(
@@ -371,51 +303,23 @@ def interval_overlap_join(
     closed intervals) between two large tables of intervals, as a hash
     EQUI-join on time buckets — the interval-interval member of the
     range-join family (point-in-interval: banded_range_join; ordered
-    nearest-before: asof_join).
+    nearest-before: the as-of joins).
 
-    Both sides explode each interval to the buckets it covers
-    (``floor(start/bucket) .. floor(end/bucket)``); candidates meet on
-    (keys..., bucket). A pair overlapping several shared buckets would
-    be emitted once per bucket, so the join keeps only the FIRST shared
-    bucket — ``bucket_id == greatest(floor(l_start/bucket),
-    floor(r_start/bucket))`` — which every overlapping pair satisfies in
-    exactly one bucket: no distinct pass, no duplicate rows. The exact
-    overlap predicate is re-applied as a residual filter.
+    Both sides explode each interval to the buckets it covers; a pair
+    overlapping several shared buckets is kept only in the FIRST one,
+    ``bucket_id == greatest(_band(l_start), _band(r_start))`` (module
+    docstring, band contract): no distinct pass, no duplicate rows.
 
     ``bucket`` is in the units of the interval columns (pass epoch
     seconds + bucket=3600 for hourly banding); choose it near the
     typical interval length so the per-row expansion stays ~2. One
-    co-partitioned shuffle on (keys, bucket); inner semantics only.
+    co-partitioned shuffle on (keys, bucket).
     """
-    keys = list(keys)
-    lb = left.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                F.floor(F.col(l_start) / bucket).cast("long"),
-                F.floor(F.col(l_end) / bucket).cast("long"),
-            )
-        ),
+    first_shared = F.greatest(_band(l_start, bucket), _band(r_start, bucket))
+    exact = (
+        (F.col(l_start) <= F.col(r_end))
+        & (F.col(r_start) <= F.col(l_end))
+        & (F.col("__bucket") == first_shared)
     )
-    rb = right.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                F.floor(F.col(r_start) / bucket).cast("long"),
-                F.floor(F.col(r_end) / bucket).cast("long"),
-            )
-        ),
-    )
-    first_shared = F.greatest(
-        F.floor(F.col(l_start) / bucket).cast("long"),
-        F.floor(F.col(r_start) / bucket).cast("long"),
-    )
-    return (
-        lb.join(rb, [*keys, "__bucket"])
-        .filter(
-            (F.col(l_start) <= F.col(r_end))
-            & (F.col(r_start) <= F.col(l_end))
-            & (F.col("__bucket") == first_shared)
-        )
-        .drop("__bucket")
-    )
+    lb, rb = _bands(l_start, l_end, bucket), _bands(r_start, r_end, bucket)
+    return _band_join(left, right, list(keys), lb, rb, exact)

@@ -8,7 +8,8 @@ most files — a linear sort on one column only skips for that column.
 
 ``zorder_key`` builds the Morton interleave as a pure JVM expression
 tree (shift/and/or — whole-stage-codegen'd, no UDF); ``cluster_by_zorder``
-range-partitions + sorts by it, which is exactly the write-side layout
+range-partitions + sorts by it (``_range_cluster``, shared with
+``cluster_by_hilbert``), which is exactly the write-side layout
 Delta/Iceberg OPTIMIZE ZORDER produces.
 """
 
@@ -59,6 +60,25 @@ def zorder_key_sql(cols: Iterable[str], bits: int = 8) -> str:
     return " | ".join(terms)
 
 
+def _range_partition(
+    df: DataFrame, cols: list, num_partitions: int | None
+) -> DataFrame:
+    """``repartitionByRange`` on ``cols``, into ``num_partitions`` when
+    given, else into the session's shuffle-partition count."""
+    if num_partitions:
+        return df.repartitionByRange(num_partitions, *cols)
+    return df.repartitionByRange(*cols)
+
+
+def _range_cluster(
+    df: DataFrame, key: Column, num_partitions: int | None
+) -> DataFrame:
+    """The write-side clustering tail shared by every curve: range-
+    partition on ``key``, sort within partitions, drop the key."""
+    out = _range_partition(df.withColumn("__key", key), ["__key"], num_partitions)
+    return out.sortWithinPartitions("__key").drop("__key")
+
+
 def cluster_by_zorder(
     df: DataFrame,
     cols: Iterable[Column | str],
@@ -70,13 +90,7 @@ def cluster_by_zorder(
     interleaved dimension) and sort within partitions. Downstream:
     ``.write.parquet(...)`` — parquet row-group stats then give readers
     multi-column skipping for free."""
-    key = zorder_key(cols, bits).alias("__zkey")
-    out = df.withColumn("__zkey", key)
-    if num_partitions:
-        out = out.repartitionByRange(num_partitions, "__zkey")
-    else:
-        out = out.repartitionByRange("__zkey")
-    return out.sortWithinPartitions("__zkey").drop("__zkey")
+    return _range_cluster(df, zorder_key(cols, bits), num_partitions)
 
 
 def linear_file_bounds(
@@ -288,10 +302,4 @@ def cluster_by_hilbert(
     min/max stats give readers the TIGHTER two-dimensional skipping
     bounds layout_curve_compare measures (total box area ~1.9x smaller
     than Morton on equal-count files at sf0.1)."""
-    key = hilbert_key(x, y, bits).alias("__hkey")
-    out = df.withColumn("__hkey", key)
-    if num_partitions:
-        out = out.repartitionByRange(num_partitions, "__hkey")
-    else:
-        out = out.repartitionByRange("__hkey")
-    return out.sortWithinPartitions("__hkey").drop("__hkey")
+    return _range_cluster(df, hilbert_key(x, y, bits), num_partitions)

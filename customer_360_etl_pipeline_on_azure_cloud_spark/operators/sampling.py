@@ -161,8 +161,7 @@ def weighted_sample(
     w = _col(weight_col)
     p = F.least(F.lit(1.0), F.lit(float(base_rate)) * w.cast("double"))
     thresh = F.floor(p * F.lit(float(16**nhex))).cast("long")
-    gate_int = F.conv(_gate(F.col(key_col), salt, nhex), 16, 10).cast("long")
-    return df.filter(gate_int < thresh)
+    return df.filter(gate_int(F.col(key_col), salt, nhex) < thresh)
 
 
 def leakage_safe_split(

@@ -8,6 +8,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import _col
+from .layout import _range_partition
 
 
 def top_k_per_group(
@@ -68,6 +69,22 @@ def sessionize(
     ).drop("__b")
 
 
+def _top1(
+    df: DataFrame,
+    keys: Iterable[str],
+    order_by: Iterable[Column | str],
+    payload: Iterable[str],
+    pick,
+) -> DataFrame:
+    """``pick(struct(order..., payload...))`` per group: the one hash
+    aggregate behind both struct-extremum top-1 forms."""
+    keys, payload = list(keys), list(payload)
+    order = [_col(c).alias(f"__o{i}") for i, c in enumerate(order_by)]
+    packed = pick(F.struct(*order, *[F.col(c) for c in payload])).alias("__top")
+    out = df.groupBy(*keys).agg(packed)
+    return out.select(*keys, *[F.col(f"__top.{c}").alias(c) for c in payload])
+
+
 def top_1_per_group_min(
     df: DataFrame,
     keys: Iterable[str],
@@ -83,12 +100,7 @@ def top_1_per_group_min(
     direction while the string stays ascending. Same map-side-combine
     scale advantage as :func:`top_1_per_group_agg` (shuffle carries one
     row per group, no sort)."""
-    keys = list(keys)
-    order = [c.alias(f"__o{i}") for i, c in enumerate(order_by_asc)]
-    payload = list(payload)
-    packed = F.min(F.struct(*order, *[F.col(c) for c in payload])).alias("__top")
-    out = df.groupBy(*keys).agg(packed)
-    return out.select(*keys, *[F.col(f"__top.{c}").alias(c) for c in payload])
+    return _top1(df, keys, order_by_asc, payload, F.min)
 
 
 def top_1_per_group_agg(
@@ -102,18 +114,16 @@ def top_1_per_group_agg(
     ``max(struct(order..., payload...))`` computes the argmax with
     map-side partial aggregation — at 100 TB this beats the window form
     because the shuffle carries one row per group instead of every row.
-    ``payload`` is a list of column NAMES (duplicated order columns are fine). ``order_by`` columns must be DESC-semantics-encoded by the caller
-    (e.g. pass ``col("count")`` to mean "largest count wins"; for an
+    ``payload`` is a list of column NAMES (duplicated order columns are
+    fine).
+
+    ``order_by`` columns must be DESC-semantics-encoded by the caller
+    (e.g. pass ``col("count")`` to mean "largest count wins"); for an
     ascending tiebreak on a string column there is no total-order
-    negation, so this variant requires numeric/invertible tiebreaks —
-    otherwise use :func:`top_k_per_group`).
+    negation, so use :func:`top_1_per_group_min` or
+    :func:`top_k_per_group` instead.
     """
-    keys = list(keys)
-    order = [_col(c).alias(f"__o{i}") for i, c in enumerate(order_by)]
-    payload = list(payload)
-    packed = F.max(F.struct(*order, *[F.col(c) for c in payload])).alias("__top")
-    out = df.groupBy(*keys).agg(packed)
-    return out.select(*keys, *[F.col(f"__top.{c}").alias(c) for c in payload])
+    return _top1(df, keys, order_by, payload, F.max)
 
 
 def _pareto_band_prefilter(
@@ -267,12 +277,7 @@ def global_row_number(
     cols = [_col(c) for c in order_cols]
     if not cols:
         raise ValueError("global_row_number: need at least one order col")
-    parts = (
-        df.repartitionByRange(num_partitions, *cols)
-        if num_partitions
-        else df.repartitionByRange(*cols)
-    )
-    pinned = parts.withColumn(
+    pinned = _range_partition(df, cols, num_partitions).withColumn(
         "__pid", F.spark_partition_id()
     ).localCheckpoint(eager=True)
     counts = sorted(

@@ -32,6 +32,7 @@ def merge_feature_tables(
     """
     if on is not None:
         return left.join(right, on=on, how=how)
-    assert zip_order is not None, "need a key or an explicit zip order"
+    if zip_order is None:
+        raise ValueError("merge_feature_tables: need a key or an explicit zip order")
     left_order, right_order = zip_order
     return positional_zip(left, right, left_order, right_order, how=how)

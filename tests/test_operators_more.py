@@ -903,3 +903,29 @@ class TestWeightedSample:
 
         df = spark.range(500).select(F.col("id").alias("k"), F.lit(50.0).alias("w"))
         assert weighted_sample(df, "k", "w", base_rate=0.5).count() == 500
+
+
+def test_lookup_alias_needs_exactly_one_value_col(spark):
+    # an argument check, not an assert: under ``python -O`` an assert
+    # vanishes and only the first of the two columns would be renamed
+    from customer_360_etl_pipeline_on_azure_cloud_spark.operators.joins import (
+        lookup,
+    )
+
+    df = spark.createDataFrame([("k1",)], "kw string")
+    dim = spark.createDataFrame(
+        [("k1", "c1", "d1")], "key string, cat string, dep string"
+    )
+    with pytest.raises(ValueError, match="exactly one value col"):
+        lookup(df, dim, "kw", "key", ["cat", "dep"], alias="category")
+
+
+def test_merge_feature_tables_needs_key_or_zip_order(spark):
+    from customer_360_etl_pipeline_on_azure_cloud_spark.plans.merge import (
+        merge_feature_tables,
+    )
+
+    a = spark.createDataFrame([(1,)], "x long")
+    b = spark.createDataFrame([(2,)], "y long")
+    with pytest.raises(ValueError, match="zip order"):
+        merge_feature_tables(a, b)

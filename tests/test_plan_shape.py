@@ -5,10 +5,13 @@ refactor can't silently regress them.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from conftest import SF_SMALL
 
+from customer_360_etl_pipeline_on_azure_cloud_spark.operators import joins
 from customer_360_etl_pipeline_on_azure_cloud_spark.testdata_queries import (
     CORE_QUERIES,
 )
@@ -70,6 +73,34 @@ def test_asof_join_is_single_window_no_join(spark):
     plan = plan_of(spark, "asof_last_purchase")
     assert "Join" not in plan
     assert plan.count("Window") >= 1
+
+
+def _node_names(df) -> list[str]:
+    # one physical-plan node per line: strip the tree glyphs and the
+    # codegen stage marker, keep the operator name
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [
+        re.sub(r"^[\s:+\-|]*(\*\(\d+\)\s*)?", "", ln).split(" ")[0]
+        for ln in plan.splitlines()
+    ]
+
+
+@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
+def test_asof_every_direction_one_exchange_one_sort(spark, direction):
+    # every direction is the same union-window pass: nearest stacks its
+    # two frames on the one sort instead of sorting twice
+    left = spark.createDataFrame(
+        [("a", 1, "x"), ("b", 5, "y")], "k string, t long, e string"
+    )
+    right = spark.createDataFrame(
+        [("a", 0, 10), ("b", 6, 20)], "k string, t2 long, v long"
+    )
+    fn = getattr(joins, f"asof_join_{direction}")
+    names = _node_names(fn(left, right, "k", "t", "t2", ["v"]))
+    assert names.count("Exchange") == 1, names
+    assert names.count("Sort") == 1, names
+    assert names.count("Window") == 1, names
+    assert not any("Join" in n for n in names), names
 
 
 def test_sessionize_single_shuffle(spark):
